@@ -31,7 +31,7 @@ object Bench {
     * class cache a 185-plan suite evicts every warmed class before its
     * measured run, so recompilation lands INSIDE the timed region —
     * the measured-phase count is the direct evidence for sizing
-    * spark.sql.codegen.cache.maxEntries (build.sbt). */
+    * GraftSession.CodegenCacheEntries. */
   private def janinoCount: Long =
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
@@ -108,37 +108,9 @@ object Bench {
     def elapsed: Double = (System.nanoTime() - t0Wall) / 1e9
     val budget = envDouble("SPARK_GRAFT_TIME_BUDGET", 240)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = envInt("SPARK_GRAFT_CPUS", 4).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // NOTE (r8): bytes-based AQE coalescing (parallelismFirst=false,
-      // 8 MB advisory) was measured here and REJECTED: an 8-entry
-      // subset improved 14%, but the full suite regressed (d-family
-      // 96 s → 113 s) — the doc-pipeline operators are CPU-per-byte
-      // heavy (hashing, shingles, array algebra), so byte-count
-      // coalescing serializes exactly the stages that need the cores.
-      // Keeping partitions = cores; details in BENCH_NOTES.
-      // every entrypoint pins UTC: Tables' TIMESTAMP_NTZ→Timestamp cast
-      // is session-timezone-dependent, so an unpinned bench session
-      // would read shifted instants on a non-UTC host
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE off FOR THE BENCH SESSION ONLY (Verify and the specs keep
-      // the default; the library never touches the flag — a 100 TB
-      // deployment wants AQE's skew/coalesce machinery). At bench scale
-      // (4 partitions, sf0.1) AQE buys nothing the static planner
-      // doesn't already do — r8 measured its bytes-coalescing configs
-      // as net-negative here — while costing per-stage re-plan +
-      // re-codegen: the sf0.001 warmup compiles the STATIC plan's
-      // generated classes, and AQE's runtime re-plans at sf0.1 compile
-      // fresh ones per entry, so the warmup stops covering codegen.
-      // Measured (full 185-entry driver-config draws, same day):
-      // quiet-phase best 175.5 s AQE-off vs 188.2 s AQE-on; slow-phase
-      // within-pair 212.7 vs 214.6; gc_sec 0.97 vs 2.0-2.7.
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // planner confs (AQE off, partitions = cores, ...) and their
+    // measured reasons live in GraftSession, shared with Verify
+    val spark = GraftSession.local(envInt("SPARK_GRAFT_CPUS", 4))
     // Streaming-drain floor controls (the bench's s-family cost is
     // state-store commits × micro-batches — harness, not plan): run the
     // MINIMUM drain that still exercises every cross-batch merge path

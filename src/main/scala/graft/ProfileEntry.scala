@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev profiling main (not part of the contract): run one entry N times
   * in one session and attribute wall time to Spark JOBS via a listener —
@@ -18,15 +17,7 @@ object ProfileEntry {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val name = args(1)
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.conf.set("graft.stream.chunks", "2")
     spark.conf.set("graft.stream.parts", "4")
     spark.conf.set("graft.stream.batches", "4")

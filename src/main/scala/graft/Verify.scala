@@ -7,15 +7,8 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.get("SPARK_GRAFT_CPUS")
-      .flatMap(_.trim.toIntOption).getOrElse(4).max(1).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      .flatMap(_.trim.toIntOption).getOrElse(4).max(1)
+    val spark = GraftSession.local(cpus)
     new java.io.File(outDir).mkdirs()
     // dev loop: SPARK_GRAFT_QUERIES=d25_vocab_stats,d26_source_mix limits
     // the dump to a comma-separated subset (same knob as Bench).
@@ -33,8 +26,9 @@ object Verify {
     // dumped first, a truncated run still yields a maximal comparable
     // prefix; the rows-only tail (no SQL oracle) goes last. Name-sorted
     // within each group so partial runs are comparable across rounds.
+    val oracleSql = SparkEntry.oracleSql
     val selected = chosen.toSeq.sortBy { case (name, _) =>
-      (if (SparkEntry.oracleSql.contains(name)) 0 else 1, name)
+      (if (oracleSql.contains(name)) 0 else 1, name)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -54,7 +48,7 @@ object Verify {
     // correctness artifact (CORRECTNESS_r10.json was {} for exactly this
     // reason). With the file first and the per-query parquet writes
     // incremental, a killed Verify yields a partial-but-real table.
-    val json = SparkEntry.oracleSql
+    val json = oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // The dump loop runs entries CONCURRENTLY by default: correctness

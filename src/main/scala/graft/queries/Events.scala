@@ -1009,7 +1009,7 @@ object Events {
       // parallel prefix: range-partition (monotone pids), window per
       // pid, then offset each partition by the cumulative totals of
       // the partitions before it (a tiny broadcast table)
-      val p = graft.util.ShufflePartitions.batch(s)
+      val p = s.conf.get("spark.sql.shuffle.partitions").toInt
       val parted = bounds.repartitionByRange(p, $"t_us")
         .withColumn("pid", spark_partition_id())
       val wIn = Window.partitionBy($"pid").orderBy($"t_us")

@@ -3,9 +3,11 @@ package graft.queries
 import graft.Tables
 import graft.streaming.{BatchingSink, FileRecordWriter, ShardedLog, StreamOps, ToRecord}
 import java.util.UUID
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming transport operators (SURVEY.md §2.1) run end-to-end as real
   * Structured Streaming queries against driver testdata, then surfaced
@@ -35,80 +37,45 @@ object Streaming {
   private def ckptDir(): String =
     graft.util.TempDirs.freshUnder("/dev/shm", "graft-ckpt")
 
-  /** Session confs every bounded drain runs under, restored after:
-    * few state partitions (drain cost is per-partition state-store
-    * checkpointing, not data volume — a real deployment sizes this to
-    * key cardinality / executor count), and the state-store PROVIDER
-    * selected by `graft.stream.stateStore`: the default HDFS-backed
-    * in-memory store, or `rocksdb` for Spark's RocksDB provider — the
-    * store a 100 TB deployment runs, where per-key state must spill
-    * beyond executor heap; StreamingSpec pins provider-identical
-    * results on the stateful operators. */
-  /** Reentrancy bookkeeping for [[withDrainConfs]]: the conf mutation is
-    * session-global, and the concurrent Verify loop can overlap several
-    * drains (and drains with batch entries). A naive save/set/restore
-    * races — a drain that snapshots another drain's temporary value as
-    * its "previous" restores the WRONG baseline and the session conf
-    * stays corrupted for the rest of the run. Instead the FIRST drain
-    * in captures the baseline and sets the drain confs; the LAST drain
-    * out restores the baseline — all drains set identical values, so
-    * overlap is harmless in between. (Single active session per JVM —
-    * true for Verify, Bench, and the shared-session test suites.) */
-  private object DrainConfs {
-    var active = 0
-    var baselineParts: String = _
-    var baselineProvider: Option[String] = None
-  }
-
-  private def withDrainConfs[T](spark: SparkSession)(body: => T): T = {
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    DrainConfs.synchronized {
-      if (DrainConfs.active == 0) {
-        DrainConfs.baselineParts = spark.conf.get("spark.sql.shuffle.partitions")
-        DrainConfs.baselineProvider = spark.conf.getOption(providerKey)
-        // publish the baseline for conf-reading BATCH entries: while the
-        // drain holds the live conf at the drain value, batch plans that
-        // size from shuffle.partitions must keep seeing the pre-drain
-        // value or a concurrent Verify drain changes batch plan shapes
-        // mid-run (see util.ShufflePartitions)
-        graft.util.ShufflePartitions.setDrainBaseline(
-          DrainConfs.baselineParts.toInt)
-        spark.conf.set("spark.sql.shuffle.partitions",
-          spark.conf.get("graft.stream.parts", "8"))
-        if (spark.conf.get("graft.stream.stateStore", "hdfs") == "rocksdb")
-          spark.conf.set(providerKey,
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      }
-      DrainConfs.active += 1
-    }
-    try body
-    finally DrainConfs.synchronized {
-      DrainConfs.active -= 1
-      if (DrainConfs.active == 0) {
-        spark.conf.set("spark.sql.shuffle.partitions", DrainConfs.baselineParts)
-        graft.util.ShufflePartitions.clearDrainBaseline()
-        DrainConfs.baselineProvider match {
-          case Some(v) => spark.conf.set(providerKey, v)
-          case None => spark.conf.unset(providerKey)
-        }
-      }
-    }
-  }
-
-  private def drainToTable(spark: SparkSession, df: DataFrame,
-                           outputMode: String): DataFrame = {
+  /** Runs one bounded drain in its own session, a clone of the caller's
+    * (the isolation Spark's StreamExecution itself takes at query start):
+    * only the clone gets the drain confs, so concurrent drains and batch
+    * entries never see each other's `shuffle.partitions`. The drain confs
+    * are few state partitions, `graft.stream.parts` (drain cost is
+    * per-partition state-store checkpointing, not data volume — a real
+    * deployment sizes this to key cardinality / executor count), and the
+    * state-store PROVIDER selected by `graft.stream.stateStore`: the
+    * default HDFS-backed in-memory store, or `rocksdb` for Spark's
+    * RocksDB provider — the store a 100 TB deployment runs, where
+    * per-key state must spill beyond executor heap; StreamingSpec pins
+    * provider-identical results on the stateful operators. The streaming
+    * plan is re-homed in the clone, and the memory-sink table back in the
+    * caller's session, by their analyzed plans. */
+  private def drain(spark: SparkSession, df: DataFrame, outputMode: String)(
+      feed: StreamingQuery => Unit): DataFrame = {
+    val session = GraftSqlBridge.cloneSession(spark)
+    session.conf.set(SQLConf.SHUFFLE_PARTITIONS.key,
+      spark.conf.get("graft.stream.parts", "8"))
+    if (spark.conf.get("graft.stream.stateStore", "hdfs") == "rocksdb")
+      session.conf.set(SQLConf.STATE_STORE_PROVIDER_CLASS.key,
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val name = "g_" + UUID.randomUUID().toString.replace("-", "")
-    withDrainConfs(spark) {
-      val q = df.writeStream
+    try {
+      val q = GraftSqlBridge.ofRows(session, df.queryExecution.analyzed)
+        .writeStream
         .format("memory")
         .queryName(name)
         .outputMode(outputMode)
         .option("checkpointLocation", ckptDir())
         .start()
-      try { q.processAllAvailable() } finally { q.stop() }
-    }
-    spark.table(name)
+      try feed(q) finally q.stop()
+      GraftSqlBridge.ofRows(spark, session.table(name).queryExecution.analyzed)
+    } finally GraftSqlBridge.detachStreams(session)
   }
+
+  private def drainToTable(spark: SparkSession, df: DataFrame,
+                           outputMode: String): DataFrame =
+    drain(spark, df, outputMode)(_.processAllAvailable())
 
   /** Like drainToTable, but the query STARTS BEFORE any data exists and
     * each chunk is fed between processAllAvailable calls — so every
@@ -119,21 +86,10 @@ object Streaming {
     * micro-batch and silently skip the merge path (ADVICE r4). */
   private def drainChunksToTable[A](spark: SparkSession, df: DataFrame,
                                     outputMode: String, in: MemoryStream[A],
-                                    chunks: Seq[Seq[A]]): DataFrame = {
-    val name = "g_" + UUID.randomUUID().toString.replace("-", "")
-    withDrainConfs(spark) {
-      val q = df.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(outputMode)
-        .option("checkpointLocation", ckptDir())
-        .start()
-      try {
-        chunks.foreach { c => in.addData(c); q.processAllAvailable() }
-      } finally { q.stop() }
+                                    chunks: Seq[Seq[A]]): DataFrame =
+    drain(spark, df, outputMode) { q =>
+      chunks.foreach { c => in.addData(c); q.processAllAvailable() }
     }
-    spark.table(name)
-  }
 
   /** Bench-tunable micro-batch chunking: split `rows` into
     * `graft.stream.chunks` successive feeds (default 4, floor 2 so the

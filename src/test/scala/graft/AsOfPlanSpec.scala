@@ -94,7 +94,7 @@ class AsOfPlanSpec extends SparkSpec {
       keys = Seq("user_id"), leftTs = "ts", rightTs = "click_ts",
       valueCols = Seq("click_ts", "click_id"), tiebreaker = Some("click_id"))
     val p = exec.queryExecution.executedPlan.toString
-    // string match: AQE wraps the tree, so exists() can't see inside
+    // string match: also sees inside an AQE wrapper, should a session enable it
     assert(p.contains("AsOfJoin "), s"no AsOfJoinExec in:\n$p")
     val exchanges = "Exchange hashpartitioning".r.findAllIn(p).length
     assert(exchanges == 2, s"expected the two co-partition exchanges, got $exchanges:\n$p")

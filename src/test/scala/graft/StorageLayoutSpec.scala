@@ -30,7 +30,7 @@ class StorageLayoutSpec extends SparkSpec {
         .join(spark.table("orders_b"),
           $"l_orderkey" === $"o_orderkey")
         .select($"l_orderkey", $"o_orderstatus")
-      joined.collect() // force final plan (AQE)
+      joined.collect() // the final plan, also under AQE
       val p = plan(joined)
       assert(p.contains("SortMergeJoin"), s"expected a sort-merge join:\n$p")
       assert(!p.contains("Exchange hashpartitioning"),

@@ -7,7 +7,8 @@
 #   2. optional: sbt test (skip with ROUND_CLOSE_SKIP_TESTS=1 when the
 #      suite already ran green on the same tree — say so in the note)
 #   3. graft.Verify at sf0.01 (concurrent dump, all 185 entries)
-#   4. tools/check.py — the driver-faithful dtype-strict DuckDB compare
+#   4. tools/check.py — the driver-faithful dtype-strict DuckDB compare;
+#      any FAIL or EMPTY entry, or an unparsed test count, fails the gate
 #   5. prints the SWEEP line (appends to SWEEP.md with ROUND_CLOSE_APPEND=1)
 #
 # Usage: tools/round_close.sh <round> [note...]
@@ -28,6 +29,8 @@ TESTS="tests skipped (ROUND_CLOSE_SKIP_TESTS=1)"
 if [ "${ROUND_CLOSE_SKIP_TESTS:-0}" != "1" ]; then
   sbt test > /tmp/round_close_test.log 2>&1 \
     || fail "sbt test failed (see /tmp/round_close_test.log)"
+  grep -Eq 'Tests: succeeded [0-9]+' /tmp/round_close_test.log \
+    || fail "test count unparsed (see /tmp/round_close_test.log)"
   TESTS=$(grep -Eo 'Tests: succeeded [0-9]+' /tmp/round_close_test.log \
     | awk '{s+=$3} END {print s " tests green"}')
 fi
@@ -48,6 +51,11 @@ rows=$(echo "$tally" | awk '{print $6}' | tr -d ',')
 total=$((pass + failn + rows))
 [ "$rc" -eq 0 ] || fail "check.py exited nonzero ($rc): $tally (see $OUT/check.log)"
 [ "$failn" -eq 0 ] || fail "oracle compare has $failn FAIL entries: $tally"
+# a rows-only entry that dumped zero rows is a failure (the driver
+# requires rows > 0), not a quiet rows-only pass
+empty=$(grep -c '^EMPTY' "$OUT/check.log")
+grep '^EMPTY' "$OUT/check.log" >&2
+[ "$empty" -eq 0 ] || fail "$empty rows-only entries are EMPTY: $tally"
 
 SHA=$(git rev-parse --short HEAD 2>/dev/null || echo unknown)
 DIRTY=""

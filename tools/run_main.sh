@@ -1,6 +1,7 @@
 #!/usr/bin/env bash
-# Run a graft main class in a JVM configured exactly like build.sbt's
-# forked `sbt runMain` JVM (module opens, page size, code cache, heap).
+# Run a graft main class in a JVM configured like build.sbt's forked
+# `sbt runMain` JVM: module opens, code cache and heap. Every Spark and
+# SQL conf lives in graft.GraftSession, so none is passed here.
 # Usage: tools/run_main.sh graft.Bench [args...]
 # Used for kill-resilience tests (a bare java process is killable without
 # orphaning, unlike sbt's fork) and fast local timing loops.
@@ -14,11 +15,6 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
   OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 exec java $OPENS \
-  -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
-  -Dspark.buffer.pageSize=4m \
   -XX:ReservedCodeCacheSize=512m \
-  -Dspark.sql.codegen.cache.maxEntries="${SPARK_GRAFT_CODEGEN_CACHE:-8192}" \
-  -Dspark.sql.codegen.useIdInClassName="${SPARK_GRAFT_CODEGEN_USEID:-false}" \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -cp "$CP" "$@"
