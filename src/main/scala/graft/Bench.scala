@@ -157,10 +157,11 @@ object Bench {
     // per-query steady-state polish.
     if (sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0") {
       val warmDir = "/root/testdata/sf0.001"
-      // NEVER warm at the measured dir: the session memos (BPE merges,
-      // centroids, edge/pair sets) key on the corpus dir, so a warmup
-      // pass over sfDir itself would pre-train exactly the artifacts
-      // pass 1 is supposed to measure — d45/d46 (single-rep builders)
+      // NEVER warm at the measured dir: util.CorpusMemo (BPE merges,
+      // centroids, edge/pair sets) keys on (session, corpus dir), and
+      // warmup runs in the measured session, so a warmup pass over sfDir
+      // itself would pre-train exactly the artifacts pass 1 is supposed
+      // to measure — d45/d46 (single-rep builders)
       // would record memo hits as their training cost. Distinct dirs
       // keep warmup JIT-only, which is its entire job.
       val warmIsMeasured =

@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
   * ProfileEntry and the specs all plan under these confs, so the plan
   * Bench times is the plan Verify checks. A session graft did not build
   * still works: `Tables.load` sets the parquet flag and registers the
-  * native functions on whatever session it is given. */
+  * native functions on whatever session it is given, and memoizes its
+  * relations per session (`util.CorpusMemo`). */
 object GraftSession {
 
   /** Compiled-class cache size. Spark's CodeGenerator caches compiled

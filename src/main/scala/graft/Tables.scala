@@ -14,30 +14,16 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Resolved-relation memo (r13): `spark.read.parquet` re-lists the
-    * path and re-reads a parquet footer ON EVERY CALL — driver-side,
-    * single-threaded work that every one of the ~400 load() calls in a
-    * full 185-entry pass re-pays for the same ten immutable tables.
-    * Memoize the ANALYZED DataFrame per (session, dir, table): a
-    * DataFrame is a plan, not data — every execution still scans the
-    * parquet — so this only dedups metadata resolution, exactly what
-    * the temp-view path (registerAll) already does for SQL entries.
-    * Keyed on the session OBJECT (not a hash) so a restarted session
-    * can never collide, and entries die with the JVM (sessions per JVM
-    * are few: one for Bench/Verify, dozens across the test suite).
-    *
-    * CONTRACT (ADVICE r13): a table directory is assumed IMMUTABLE for
-    * the lifetime of the session that first loaded it — an in-place
-    * rewrite of `dir` within one session would serve the stale file
-    * listing/schema resolved at first load. Every current caller
-    * (Bench, Verify, the specs) reads the driver-generated testdata,
-    * which never mutates; if load() ever becomes library surface for
-    * mutable paths, fold a content fingerprint (CorpusId's scheme) into
-    * the memo key. Pinned by TablesMemoSpec: same session returns the
-    * SAME DataFrame instance, a new session re-resolves. */
-  private val relMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-
+  /** The analyzed DataFrame of `dir`'s table `name`, memoized per
+    * (session, dir, table) in [[graft.util.CorpusMemo]]: `spark.read.parquet`
+    * re-lists the path and re-reads a parquet footer on every call,
+    * driver-side single-threaded work that each of the ~400 load() calls
+    * of a full 185-entry pass would re-pay for the same ten tables. A
+    * DataFrame is a plan, not data: every execution still scans the
+    * parquet, so the memo only dedups metadata resolution, as the
+    * temp-view path (registerAll) does for SQL entries. An in-place
+    * rewrite of `dir` changes its fingerprint, so the next load()
+    * resolves the table again. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     // events.parquet carries TIMESTAMP(NANOS); Spark only reads those as
     // long when this legacy flag is on (SPARK-40819). Harmless elsewhere.
@@ -45,8 +31,7 @@ object Tables {
     // Every query path goes through here, so the session always has the
     // graft native functions available (Column API and spark.sql alike).
     graft.functions.GraftFunctions.register(spark)
-    relMemo.computeIfAbsent((spark, dir, name),
-      _ => spark.read.parquet(s"$dir/$name.parquet"))
+    graft.util.CorpusMemo.get(spark, dir, s"table/$name")(spark.read.parquet(s"$dir/$name.parquet"))
   }
 
   /** events with `ts` as a proper TimestampType (µs), whatever physical

@@ -100,9 +100,10 @@ object Verify {
       // — materializations whose recompute could differ (nondeterminism
       // like spark_partition_id; e26's pid↔offset pairing) must use
       // localCheckpoint, which this clear cannot touch; (2) the clear
-      // may evict util.RowMemo's deliberately-long-lived over-cap entry
-      // (RowMemo.getOrBuild re-registers it on the next consumer, so
-      // the cost is one recompute, never a permanently-uncached plan).
+      // may evict util.CorpusMemo's over-cap frame, which lives as long
+      // as its corpus (CorpusMemo.rows persists it again for the next
+      // consumer, so the cost is one recompute, never a permanently
+      // uncached plan).
       // If the clear cadence ever tightens, re-check both.
       val processed = new java.util.concurrent.atomic.AtomicInteger(0)
       val workers = (1 to nThreads).map { _ =>

@@ -80,17 +80,18 @@ object AnnIvf {
     KMeans.fitCentroidsQ(spark, qdf(embeddings), numClusters, iters)
   }
 
-  /** [[centroids]] memoized per corpus key (KMeans.centroidCache, under
-    * the normalized-lattice mode tag): the IVF index over an immutable
-    * corpus is deterministic, so every consumer of the same (corpus, C)
-    * index — the ANN search entry and the semantic-dedup candidate
-    * generator — shares one Lloyd build per session. */
+  /** [[centroids]] memoized per session and corpus dir
+    * (KMeans.fitCentroidsQCached, under the normalized-lattice mode tag):
+    * the IVF index over a corpus is deterministic, so every consumer of
+    * the same (corpus, C) index — the ANN search entry and the
+    * semantic-dedup candidate generator — shares one Lloyd build per
+    * session. `embeddings` must be derived from `dir` alone. */
   def centroidsCached(spark: SparkSession, embeddings: => DataFrame,
                       numClusters: Int, iters: Int,
-                      corpusKey: String): Array[Array[Long]] = {
+                      dir: String): Array[Array[Long]] = {
     GraftFunctions.register(spark)
     KMeans.fitCentroidsQCached(spark, qdf(embeddings), numClusters, iters,
-      s"ivfnorm|$corpusKey")
+      dir, "ivfnorm")
   }
 
   /** Nearest-centroid assignment: a single projection — the lattice
@@ -135,18 +136,18 @@ object AnnIvf {
   }
 
   /** Top-k neighbors for each query vector, probing `nprobe` clusters.
-    * `corpusKey`, when set, memoizes the index build per corpus (see
-    * [[centroidsCached]]) — pass it for immutable corpora so repeated
-    * searches and other consumers of the same index skip the Lloyd
-    * rounds; leave unset for one-off or mutable inputs. */
+    * `corpusDir`, when set, memoizes the index build per corpus (see
+    * [[centroidsCached]]) — pass the dir `embeddings` was read from so
+    * repeated searches and other consumers of the same index skip the
+    * Lloyd rounds; leave unset for derived or in-memory inputs. */
   def search(spark: SparkSession, embeddings: DataFrame, queries: DataFrame,
              numClusters: Int, nprobe: Int, k: Int,
-             corpusKey: Option[String] = None): DataFrame = {
+             corpusDir: Option[String] = None): DataFrame = {
     import spark.implicits._
     GraftFunctions.register(spark)
-    val cents = corpusKey match {
-      case Some(key) =>
-        centroidsCached(spark, embeddings, numClusters, DefaultIters, key)
+    val cents = corpusDir match {
+      case Some(dir) =>
+        centroidsCached(spark, embeddings, numClusters, DefaultIters, dir)
       case None => centroids(spark, embeddings, numClusters)
     }
     val indexed = assign(spark, embeddings, cents)

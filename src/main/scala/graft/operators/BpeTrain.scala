@@ -31,37 +31,29 @@ import org.apache.spark.sql.functions._
   */
 object BpeTrain {
 
-  /** JVM-lifetime memo of trained merge sequences, keyed by the CALLER's
-    * corpus identity (data directory + normalization column + k). A
-    * training run is deterministic over an immutable corpus, and two
-    * entries share one pipeline (d45 trains, d47 applies the trained
-    * merges), so a session that runs both would otherwise pay the
-    * k-round corpus recount twice for byte-identical output. The cached
-    * value is k tiny driver-side rows (pair + counts), never corpus
-    * data; Spark-level cache clearing between queries cannot invalidate
-    * it and does not need to. Keys should be derived via
-    * [[graft.util.CorpusId.key]] (dir + file fingerprint): an in-place
-    * corpus rewrite then yields a NEW key and the stale entry is simply
-    * never read again. Callers with anonymous corpora must use
-    * [[train]] directly. */
-  private val trainedCache =
-    new graft.util.KeyedOnce[Array[(Long, String, Long, Long)]]
-
-  /** [[train]] memoized on `corpusKey` — ALWAYS token-tracking, so every
-    * consumer (pair-only appliers and token-accounting reporters alike)
-    * can share one entry. Deliberate tradeoff: when a pair-only
-    * consumer is the one that populates the cache, it pays the final
-    * token-sum pass its old trackTokens=false call skipped (~one corpus
-    * projection) — strictly cheaper than the alternative, where a
-    * token-tracking consumer arriving second would have to RETRAIN the
-    * whole k rounds because the cached entry lacks the last total.
-    * `docs` is by-name: a cache hit never builds the corpus plan.
-    * KeyedOnce runs the training outside any map bin lock, so
-    * concurrent callers of unrelated keys never queue behind a
-    * multi-second merge-round loop. */
+  /** [[train]] memoized per session and corpus dir in
+    * [[graft.util.CorpusMemo]] (with the normalization column and k in the
+    * tag). A training run is deterministic over a corpus, and two entries
+    * share one pipeline (d45 trains, d47 applies the trained merges), so
+    * a session that runs both would otherwise pay the k-round corpus
+    * recount twice for byte-identical output. The memoized value is k
+    * tiny driver-side rows (pair + counts), never corpus data; Spark-level
+    * cache clearing between queries cannot invalidate it and does not need
+    * to. `docs` must be derived from `dir` alone; callers with anonymous
+    * corpora use [[train]] directly.
+    *
+    * Always token-tracking, so every consumer (pair-only appliers and
+    * token-accounting reporters alike) can share one entry. Deliberate
+    * tradeoff: when a pair-only consumer is the one that populates the
+    * memo, it pays the final token-sum pass its old trackTokens=false
+    * call skipped (~one corpus projection) — strictly cheaper than the
+    * alternative, where a token-tracking consumer arriving second would
+    * have to RETRAIN the whole k rounds because the memoized entry lacks
+    * the last total. `docs` is by-name: a hit never builds the corpus
+    * plan. */
   def trainCached(spark: SparkSession, docs: => DataFrame, normCol: String,
-                  k: Int, corpusKey: String): DataFrame = {
-    val rows = trainedCache.getOrCompute(s"$corpusKey|$normCol|$k") {
+                  k: Int, dir: String): DataFrame = {
+    val rows = graft.util.CorpusMemo.get(spark, dir, s"bpe/$normCol/$k") {
       train(spark, docs, normCol, k, trackTokens = true)
         .collect()
         .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))

@@ -90,28 +90,20 @@ object KMeans {
         $"best".getField("cid").as("cluster_id"), $"best".getField("d").as("dist2"))
   }
 
-  /** JVM-lifetime memo of fitted centroids, keyed by the CALLER's corpus
-    * identity plus a quantization-mode tag (plain lattice vs AnnIvf's
-    * normalized lattice — same k over the same corpus yields different
-    * centroids per mode, so the mode MUST be in the key). Same
-    * reasoning as BpeTrain's trainedCache: Lloyd from deterministic
-    * seeds over an immutable corpus is a pure function, several entries
-    * share one index (d46 fits, d68 samples from the same clustering;
-    * d11 and d44 probe the same C=16 IVF), and the cached value is
-    * k×dim longs — never vectors. Corpus identity should come from
-    * [[graft.util.CorpusId.key]] (dir + file fingerprint, so an
-    * in-place rewrite misses); callers with anonymous corpora use the
-    * uncached paths. */
-  private val centroidCache = new graft.util.KeyedOnce[Array[Array[Long]]]
-
-  /** [[fitCentroidsQ]] memoized on `cacheKey` (which must encode corpus
-    * + quantization mode); `qdf` is by-name so a hit never builds the
-    * quantization plan. KeyedOnce keeps the Lloyd rounds outside any
-    * map bin lock (see its scaladoc). */
+  /** [[fitCentroidsQ]] memoized per session and corpus dir in
+    * [[graft.util.CorpusMemo]], under a quantization-mode tag (plain
+    * lattice vs AnnIvf's normalized lattice: the same k over the same
+    * corpus yields different centroids per mode, so the mode must be in
+    * the tag). Lloyd from deterministic seeds over a corpus is a pure
+    * function, several entries share one index (d46 fits, d68 samples
+    * from the same clustering; d11 and d44 probe the same C=16 IVF), and
+    * the memoized value is k×dim longs, never vectors. `qdf` must be
+    * derived from `dir` alone and is by-name, so a hit never builds the
+    * quantization plan. */
   private[operators] def fitCentroidsQCached(spark: SparkSession, qdf: => DataFrame,
-                                             k: Int, iters: Int,
-                                             cacheKey: String): Array[Array[Long]] =
-    centroidCache.getOrCompute(s"$cacheKey|$k|$iters") {
+                                             k: Int, iters: Int, dir: String,
+                                             mode: String): Array[Array[Long]] =
+    graft.util.CorpusMemo.get(spark, dir, s"centroids/$mode/$k/$iters") {
       fitCentroidsQ(spark, qdf, k, iters)
     }
 
@@ -158,16 +150,16 @@ object KMeans {
     assignQ(qdf, cents).select($"vec_id", $"cluster_id", $"dist2")
   }
 
-  /** [[fit]] with the centroid rounds memoized per corpus key (see
-    * centroidCache): the fitting entry and every consumer of the same
+  /** [[fit]] with the centroid rounds memoized per corpus dir (see
+    * fitCentroidsQCached): the fitting entry and every consumer of the same
     * clustering (d46 → d68) share one Lloyd run per session; the final
     * assignment pass — a map-side projection — re-executes per call. */
   def fitCached(spark: SparkSession, embs: DataFrame, k: Int, iters: Int,
-                corpusKey: String): DataFrame = {
+                dir: String): DataFrame = {
     import spark.implicits._
     GraftFunctions.register(spark)
     val qdf = embs.select($"vec_id", quantize($"embedding").as("q"))
-    val cents = fitCentroidsQCached(spark, qdf, k, iters, s"plain|$corpusKey")
+    val cents = fitCentroidsQCached(spark, qdf, k, iters, dir, "plain")
     assignQ(qdf, cents).select($"vec_id", $"cluster_id", $"dist2")
   }
 }

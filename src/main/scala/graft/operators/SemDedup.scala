@@ -75,30 +75,27 @@ object SemDedup {
   def adaptiveClusters(n: Long, nprobe: Int, targetCell: Int = 1000): Int =
     math.max(16, math.ceil(nprobe * n.toDouble / targetCell).toInt)
 
-  /** Corpus row counts under the immutable-corpus-key contract (see
-    * annEdges): one count job per corpus per session. */
-  private val countCache = new graft.util.KeyedOnce[Long]
-
-  /** `corpusKey`, when set, memoizes the IVF centroid build per corpus
+  /** `corpusDir`, when set, memoizes the IVF centroid build per corpus
     * (AnnIvf.centroidsCached) — the candidate generator then shares the
     * session's index with every other consumer of the same (corpus, C),
-    * e.g. the ANN search entry. Unset = build fresh (mutable inputs). */
+    * e.g. the ANN search entry. Pass the dir `embs` was read from; unset
+    * = build fresh (derived or in-memory inputs). */
   def annEdges(spark: SparkSession, embs: DataFrame, threshold: Double,
                numClusters: Int = -1, nprobe: Int = 2,
-               corpusKey: Option[String] = None): DataFrame = {
+               corpusDir: Option[String] = None): DataFrame = {
     import spark.implicits._
     GraftFunctions.register(spark)
-    // the adaptive cell count needs n; memoize it under the same
-    // immutable-corpus contract as the centroids so a shared-index call
-    // doesn't pay a count job just to re-derive the same C
+    // the adaptive cell count needs n; memoize it with the centroids so
+    // a shared-index call doesn't pay a count job just to re-derive the
+    // same C
     val c = if (numClusters > 0) numClusters
-            else adaptiveClusters(corpusKey match {
-              case Some(key) => countCache.getOrCompute(key)(embs.count())
+            else adaptiveClusters(corpusDir match {
+              case Some(dir) => graft.util.CorpusMemo.get(spark, dir, "semdedup/count")(embs.count())
               case None => embs.count()
             }, nprobe)
-    val cents = corpusKey match {
-      case Some(key) =>
-        AnnIvf.centroidsCached(spark, embs, c, AnnIvf.DefaultIters, key)
+    val cents = corpusDir match {
+      case Some(dir) =>
+        AnnIvf.centroidsCached(spark, embs, c, AnnIvf.DefaultIters, dir)
       case None => AnnIvf.centroids(spark, embs, c)
     }
     // deliberately NOT persisted: assignTop is an exchange-free

@@ -648,10 +648,10 @@ object Docs {
     graft.operators.SimilarityJoin.jaccard(
       shingleSets(s, dir), "doc_id", "sh", 0.5)
 
-  /** Session memo of the exact near-dup edge set, keyed by corpus
-    * identity (CorpusId.key: dir + file-count/bytes/mtime fingerprint,
-    * so an in-place rewrite misses instead of serving stale edges) —
-    * the BpeTrain.trainedCache pattern applied to the curation
+  /** Session memo of the exact near-dup edge set per corpus dir
+    * (graft.util.CorpusMemo.rows: an in-place rewrite releases the
+    * stale edges and rebuilds) — the BpeTrain.trainCached pattern
+    * applied to the curation
     * pipeline's central shared artifact: NINE entries consume the same
     * deterministic (a_id, b_id, jaccard) set (d13 clusters it, d17/d23
     * dedup with it, d37 gates ingest, d40 cross-tabs it, d43 picks
@@ -659,17 +659,16 @@ object Docs {
     * threshold curve), and the per-entry
     * `.persist()` this replaces was cleared between entries, so a
     * session running the family recomputed the join once per consumer.
-    * Capped at 200k rows (util.RowMemo): above the cap the memo
+    * Capped at 200k rows (CorpusMemo.MaxRows): above the cap the memo
     * declines and the caller gets the distributed persisted join
     * instead — the 100 TB path, where an edge set is written to a table
-    * once and read by every consumer, not held on a driver. */
-  private val edgeMemo = new graft.util.RowMemo(maxRows = 200000)
-
-  /** EXACT Jaccard>=0.5 near-dup edges via the prefix-filtered
+    * once and read by every consumer, not held on a driver.
+    *
+    * EXACT Jaccard>=0.5 near-dup edges via the prefix-filtered
     * similarity join — deterministic (no LSH misses), so d13/d17 built
     * on it are oracle-checkable end to end. */
   private def jaccardEdges(s: SparkSession, dir: String): DataFrame =
-    edgeMemo.getOrBuild(s, graft.util.CorpusId.key(dir), jaccardJoin(s, dir))
+    graft.util.CorpusMemo.rows(s, dir, "jaccard-edges")(jaccardJoin(s, dir))
 
   /** d52's oracle — generated per n-gram size (top-mass CTEs for
     * n = 2..4, coverage CTEs for n = 5..10), the same structure the
@@ -1218,11 +1217,11 @@ object Docs {
       import s.implicits._
       val nv = embs(s, dir)
       val queries = nv.filter($"vec_id" < 10)
-      // corpusKey: the C=16 IVF over this immutable corpus is the same
+      // corpusDir: the C=16 IVF over this corpus is the same
       // index d44's candidate generator probes — one Lloyd build per
       // session serves both (AnnIvf.centroidsCached).
       graft.operators.AnnIvf.search(s, nv, queries,
-        numClusters = 16, nprobe = 4, k = 5, corpusKey = Some(graft.util.CorpusId.key(dir)))
+        numClusters = 16, nprobe = 4, k = 5, corpusDir = Some(dir))
         .orderBy($"q_id", $"rk")
     },
 
@@ -2276,7 +2275,7 @@ object Docs {
       // same C=16 the parity spec pins.
       SemDedup.components(s, embs(s, dir),
           SemDedup.annEdges(s, embs(s, dir), 0.4, nprobe = 4,
-            corpusKey = Some(graft.util.CorpusId.key(dir))))
+            corpusDir = Some(dir)))
         .orderBy($"vec_id")
     },
 
@@ -2296,7 +2295,7 @@ object Docs {
       // testdata dir) — whichever runs first pays the k-round recount.
       graft.operators.BpeTrain.trainCached(s,
           docs(s, dir).select(Text.normalize($"text").as("norm")), "norm",
-          k = 6, corpusKey = graft.util.CorpusId.key(dir))
+          k = 6, dir = dir)
         .orderBy($"step")
     },
 
@@ -2378,7 +2377,7 @@ object Docs {
       // trainCached (see d45): shares the trained merge sequence with
       // d45 in-session instead of recounting the corpus six more times.
       val merges = graft.operators.BpeTrain
-        .trainCached(s, corpus.select($"norm"), "norm", k = 6, corpusKey = graft.util.CorpusId.key(dir))
+        .trainCached(s, corpus.select($"norm"), "norm", k = 6, dir = dir)
         .orderBy($"step").collect().map(_.getString(1)).toSeq
       val applied = merges.foldLeft($"norm".as("s"): org.apache.spark.sql.Column)(
         (c, p) => graft.operators.BpeTrain.applyMerge(c, p))
@@ -2410,7 +2409,7 @@ object Docs {
       // fitCached: d46 fits the (k=8, 3-round) clustering d68 samples
       // from — one Lloyd run per corpus per session serves both.
       graft.operators.KMeans.fitCached(s, embs(s, dir), k = 8, iters = 3,
-        corpusKey = graft.util.CorpusId.key(dir))
+        dir = dir)
         .orderBy($"vec_id")
     },
 
@@ -3523,7 +3522,7 @@ object Docs {
       // fitCached (see d46): shares the session's Lloyd rounds; only
       // the map-side assignment pass re-executes here.
       val asg = graft.operators.KMeans.fitCached(s, embs(s, dir), k = 8,
-        iters = 3, corpusKey = graft.util.CorpusId.key(dir))
+        iters = 3, dir = dir)
       val w = Window.partitionBy($"cluster_id")
         .orderBy(md5($"vec_id".cast("string").cast("binary")), $"vec_id")
       asg.select($"vec_id", $"cluster_id")

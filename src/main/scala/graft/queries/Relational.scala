@@ -64,22 +64,20 @@ object Relational {
       .select($"a", $"b")
   }
 
-  /** Session memo of the co-purchase pair set per corpus identity
-    * (CorpusId.key fingerprint, not the bare dir string) — the
+  /** Session memo of the co-purchase pair set per corpus dir
+    * (graft.util.CorpusMemo.rows) — the
     * docs-family edge-memo pattern on the relational side: FOUR graph
     * entries (q33 pagerank, q34 triangles, q35 components, q36 onion
     * peeling) iterate over the same deterministic (a, b) set that q32's
     * own entry derives, and each was re-running the lineitem pair
     * derivation because its per-entry persist/localCheckpoint is
     * cleared between entries. Capped like the docs memo (200k rows,
-    * util.RowMemo): above the cap the caller gets the distributed plan
+    * CorpusMemo.MaxRows): above the cap the caller gets the distributed plan
     * (the 100 TB path — an edge set that size lives in a table, not on
     * a driver). q32 itself never reads the memo: its semantic IS the
     * derivation and its plan guard pins the join-free shape. */
-  private val pairMemo = new graft.util.RowMemo(maxRows = 200000)
-
   private def coPurchasePairs(s: SparkSession, dir: String): DataFrame =
-    pairMemo.getOrBuild(s, graft.util.CorpusId.key(dir), coPurchaseE0(s, dir))
+    graft.util.CorpusMemo.rows(s, dir, "copurchase-pairs")(coPurchaseE0(s, dir))
 
   /** Spark twin of [[coPurchaseSql]]: the symmetric (src, dst) edge set
     * over the memoized pairs. */

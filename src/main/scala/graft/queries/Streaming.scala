@@ -50,7 +50,9 @@ object Streaming {
     * per-key state must spill beyond executor heap; StreamingSpec pins
     * provider-identical results on the stateful operators. The streaming
     * plan is re-homed in the clone, and the memory-sink table back in the
-    * caller's session, by their analyzed plans. */
+    * caller's session, by their analyzed plans. Both the clone and the
+    * session Spark clones again for the query's run are detached from the
+    * context's listener bus afterwards. */
   private def drain(spark: SparkSession, df: DataFrame, outputMode: String)(
       feed: StreamingQuery => Unit): DataFrame = {
     val session = GraftSqlBridge.cloneSession(spark)
@@ -68,7 +70,10 @@ object Streaming {
         .outputMode(outputMode)
         .option("checkpointLocation", ckptDir())
         .start()
-      try feed(q) finally q.stop()
+      try feed(q) finally {
+        q.stop()
+        GraftSqlBridge.detachStreams(GraftSqlBridge.runSession(q))
+      }
       GraftSqlBridge.ofRows(spark, session.table(name).queryExecution.analyzed)
     } finally GraftSqlBridge.detachStreams(session)
   }

@@ -2,6 +2,8 @@ package org.apache.spark.sql
 
 import org.apache.spark.scheduler.SparkListenerInterface
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Minimal `private[sql]` bridge. The one graft class outside the graft
   * package; used by `graft.plans` and the streaming drains. */
@@ -17,6 +19,10 @@ object GraftSqlBridge {
     * StreamExecution takes at every query start. */
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** The session `q`'s StreamExecution cloned for its run. */
+  def runSession(q: StreamingQuery): SparkSession =
+    q.asInstanceOf[StreamingQueryWrapper].streamingQuery.sparkSessionForStream
 
   /** Detach a finished session's StreamingQueryManager from the shared
     * SparkContext. The manager adds its listener bus to the context's

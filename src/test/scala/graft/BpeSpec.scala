@@ -76,23 +76,22 @@ class BpeSpec extends SparkSpec {
     import spark.implicits._
     val docs = Tables.load(spark, Sf0001, "documents")
       .select(Text.normalize(col("text")).as("norm"))
-    val key = s"bpespec-cache-$Sf0001"
     val direct = graft.operators.BpeTrain.train(spark, docs, "norm", k = 3)
       .orderBy($"step").collect().toSeq
     val cached = graft.operators.BpeTrain
-      .trainCached(spark, docs, "norm", k = 3, corpusKey = key)
+      .trainCached(spark, docs, "norm", k = 3, dir = Sf0001)
       .orderBy($"step").collect().toSeq
     assert(cached === direct, "cached training must equal direct training")
     // a HIT must not rebuild the corpus plan: the by-name docs argument
     // stays unevaluated, so a poisoned thunk proves the memo was used
     val hit = graft.operators.BpeTrain
       .trainCached(spark, sys.error("cache miss: corpus plan rebuilt"),
-        "norm", k = 3, corpusKey = key)
+        "norm", k = 3, dir = Sf0001)
       .orderBy($"step").collect().toSeq
     assert(hit === direct)
     // a different k is a different key — must retrain, not serve k=3
     val k2 = graft.operators.BpeTrain
-      .trainCached(spark, docs, "norm", k = 2, corpusKey = key)
+      .trainCached(spark, docs, "norm", k = 2, dir = Sf0001)
       .collect()
     assert(k2.length === 2)
   }

@@ -90,4 +90,23 @@ class DrainIsolationSpec extends SparkSpec {
       spark.conf.unset("graft.stream.stateStore")
     }
   }
+
+  /** Streaming listener buses on the context's event bus. Every session
+    * that runs a query adds one; `listenerBus` is Spark-private, so it is
+    * read by reflection. */
+  private def queryBuses(): Int = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("listeners").invoke(bus)
+      .asInstanceOf[java.util.List[AnyRef]].asScala
+      .count(_.getClass.getSimpleName == "StreamingQueryListenerBus")
+  }
+
+  test("drains leave no streaming listener bus on the context") {
+    val entry = SparkEntry.queries("s4_watermark_dedup")
+    entry(spark, Sf0001).collect()
+    val before = queryBuses()
+    (1 to 25).foreach(_ => entry(spark, Sf0001).collect())
+    assert(queryBuses() === before, "each drain left a listener bus behind")
+  }
 }

@@ -3,16 +3,25 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 
-import graft.util.{KeyedOnce, RowMemo}
+import graft.util.CorpusMemo
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.storage.StorageLevel
 
 /** The concurrency contract the concurrent Verify loop depends on:
   * one build per key no matter how many threads race the same key, no
-  * cross-key serialization through a shared bin lock, and RowMemo's
+  * cross-key serialization through a shared bin lock, and the capped-rows
   * over-cap / failure paths behaving under contention. These are the
   * exact defect classes a review pass found in the first memo
   * implementation (duplicate builds via get-then-put; multi-second
-  * builds inside computeIfAbsent holding a bin lock). */
+  * builds inside computeIfAbsent holding a bin lock). Each test keys on
+  * a fresh empty corpus dir of its own. */
 class MemoConcurrencySpec extends SparkSpec {
+
+  private def corpus(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-memo").toFile
+    dir.deleteOnExit()
+    dir.toString
+  }
 
   private def inParallel(n: Int)(body: Int => Unit): Unit = {
     val pool = Executors.newFixedThreadPool(n)
@@ -30,27 +39,26 @@ class MemoConcurrencySpec extends SparkSpec {
     assert(failures.isEmpty, s"worker failures: ${failures.peek()}")
   }
 
-  test("KeyedOnce: 8 threads racing one key run the build exactly once " +
+  test("CorpusMemo.get: 8 threads racing one key run the build exactly once " +
       "and all observe its value") {
-    val memo = new KeyedOnce[Int]
+    val dir = corpus()
     val builds = new AtomicInteger(0)
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
     inParallel(8) { _ =>
-      seen.add(memo.getOrCompute("k") { Thread.sleep(50); builds.incrementAndGet(); 42 })
+      seen.add(CorpusMemo.get(spark, dir, "k") { Thread.sleep(50); builds.incrementAndGet(); 42 })
     }
     assert(builds.get() === 1, "the build must run exactly once per key")
     assert(seen.size === 8)
     seen.forEach(v => assert(v === 42))
   }
 
-  test("KeyedOnce: distinct keys build concurrently — a slow build does " +
-      "not gate an unrelated key") {
-    val memo = new KeyedOnce[String]
+  test("CorpusMemo.get: a slow build does not gate an unrelated key") {
+    val dir = corpus()
     val slowStarted = new CountDownLatch(1)
     val fastDone = new CountDownLatch(1)
     inParallel(2) {
       case 0 =>
-        memo.getOrCompute("slow") {
+        CorpusMemo.get(spark, dir, "slow") {
           slowStarted.countDown()
           // the slow build completes ONLY once the fast key finished:
           // if builds serialized through a shared lock this deadlocks
@@ -61,43 +69,41 @@ class MemoConcurrencySpec extends SparkSpec {
         }
       case _ =>
         assert(slowStarted.await(60, TimeUnit.SECONDS))
-        memo.getOrCompute("fast")("fast-done")
+        CorpusMemo.get(spark, dir, "fast")("fast-done")
         fastDone.countDown()
     }
   }
 
-  test("RowMemo: racing threads on one key build the distributed set once; " +
-      "all get identical local relations") {
+  test("CorpusMemo.rows: racing threads on one key build the distributed set " +
+      "once; all get local relations") {
     import spark.implicits._
-    val memo = new RowMemo(maxRows = 1000)
+    val dir = corpus()
     val builds = new AtomicInteger(0)
     val counts = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     inParallel(6) { _ =>
-      val df = memo.getOrBuild(spark, "edges", {
+      val df = CorpusMemo.rows(spark, dir, "edges") {
         builds.incrementAndGet()
         Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("a", "b")
-      })
+      }
+      assert(df.queryExecution.analyzed.isInstanceOf[LocalRelation])
       counts.add(df.count())
     }
     assert(builds.get() === 1)
     counts.forEach(c => assert(c === 3L))
   }
 
-  test("RowMemo: the over-cap path never collects — every caller shares " +
-      "the ONE persisted distributed frame, built once") {
-    import spark.implicits._
-    val memo = new RowMemo(maxRows = 2)
+  test("CorpusMemo.rows: over the cap every caller shares ONE persisted frame, " +
+      "persisted again after a clear") {
+    val dir = corpus()
     val builds = new AtomicInteger(0)
-    def dist = { builds.incrementAndGet(); Seq(1L, 2L, 3L, 4L).toDF("v") }
-    val first = memo.getOrBuild(spark, "big", dist)
-    assert(first.count() === 4)
+    def dist = { builds.incrementAndGet(); spark.range(CorpusMemo.MaxRows + 1).toDF("v") }
+    val first = CorpusMemo.rows(spark, dir, "big")(dist)
+    assert(first.count() === CorpusMemo.MaxRows + 1)
     val probeBuilds = builds.get()
-    val second = memo.getOrBuild(spark, "big", dist)
-    assert(second.count() === 4)
+    val second = CorpusMemo.rows(spark, dir, "big")(dist)
     // the over-cap probe's frame IS the memo: later callers get the
-    // SAME DataFrame (one CacheManager registration per key — the r11
-    // shape re-persisted a fresh plan per caller and accumulated
-    // registrations nothing owned), so no further plan constructions
+    // SAME DataFrame (one CacheManager registration per key), so no
+    // further plan constructions
     assert(builds.get() === probeBuilds,
       "an over-cap hit must not rebuild the distributed plan")
     assert(second eq first, "all over-cap callers must share one frame")
@@ -108,27 +114,29 @@ class MemoConcurrencySpec extends SparkSpec {
     // (storageLevel asks the live CacheManager — the executedPlan lazy
     // val on the shared Dataset would show the stale pre-clear plan)
     spark.catalog.clearCache()
-    assert(first.storageLevel === org.apache.spark.storage.StorageLevel.NONE,
+    assert(first.storageLevel === StorageLevel.NONE,
       "precondition: the clear evicted the memo's entry")
-    val third = memo.getOrBuild(spark, "big", dist)
-    assert(third.count() === 4)
-    assert(third.storageLevel !== org.apache.spark.storage.StorageLevel.NONE,
-      "getOrBuild must re-register the evicted cache entry")
+    val third = CorpusMemo.rows(spark, dir, "big")(dist)
+    assert(third eq first)
+    assert(third.storageLevel !== StorageLevel.NONE,
+      "rows must re-register the evicted cache entry")
     spark.catalog.clearCache()
   }
 
-  test("RowMemo: a failing build does not poison the cell — the next " +
-      "caller retries and succeeds") {
+  test("CorpusMemo: a failing build leaves no entry — the next caller " +
+      "retries and succeeds") {
     import spark.implicits._
-    val memo = new RowMemo(maxRows = 1000)
+    val dir = corpus()
     val attempts = new AtomicInteger(0)
     def flaky = {
       if (attempts.incrementAndGet() == 1) sys.error("transient build failure")
       Seq(7L).toDF("v")
     }
-    intercept[RuntimeException] { memo.getOrBuild(spark, "flaky", flaky) }
-    val ok = memo.getOrBuild(spark, "flaky", flaky)
+    intercept[RuntimeException] { CorpusMemo.rows(spark, dir, "flaky")(flaky) }
+    assert(!CorpusMemo.tags(spark, dir).contains("flaky"))
+    val ok = CorpusMemo.rows(spark, dir, "flaky")(flaky)
     assert(ok.count() === 1)
     assert(attempts.get() === 2)
+    assert(CorpusMemo.tags(spark, dir) === Set("flaky"))
   }
 }
