@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths, StandardCopyOption}
 import java.util
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -60,21 +60,17 @@ object ShardedLog {
 
   val Format = "graft.streaming.ShardedLogProvider"
 
-  /** Append one record file atomically (write temp + move) so readers
-    * never observe partial files; replacing an existing seq is allowed so
-    * an epoch replay (checkpoint recovery) is idempotent, not
-    * duplicating. Returns the file's path. */
   private val ShardName = "[A-Za-z0-9_-]+".r
-  def append(root: Path, shard: String, seq: Long, lines: Seq[String]): Path = {
-    require(ShardName.matches(shard),
-      s"shard name '$shard' must match ${ShardName.regex} (it is a directory name and a JSON offset key)")
-    val dir = root.resolve(shard)
-    Files.createDirectories(dir)
-    val tmp = Files.createTempFile(dir, ".tmp", ".rec")
-    Files.write(tmp, lines.asJava, StandardCharsets.UTF_8)
-    Files.move(tmp, dir.resolve(f"$seq%08d.rec"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+
+  /** Append one record file atomically (write temp + rename) so readers
+    * never observe partial files. This is the REPLACE contract: a file
+    * already at `seq` is replaced, so an epoch replay (checkpoint
+    * recovery re-running `ShardedLogWriter`'s foreachBatch) is
+    * idempotent, not duplicating. A writer that allocates sequences
+    * itself ([[FileRecordWriter]]) publishes through [[link]] instead,
+    * which never replaces. Returns the file's path. */
+  def append(root: Path, shard: String, seq: Long, lines: Seq[String]): Path =
+    staged(root, shard, ".rec", writeLines(lines))(replace(_, _, seq, ".rec"))
 
   /** Binary sibling of [[append]] for payloads that do not survive the
     * line-oriented UTF-8 layout (the reference's stream is raw
@@ -84,18 +80,46 @@ object ShardedLog {
     * file holds one flush, so the per-shard sequence space is shared
     * with `.rec` files. */
   def appendBinary(root: Path, shard: String, seq: Long,
-                   payloads: Seq[Array[Byte]]): Path = {
-    require(ShardName.matches(shard),
-      s"shard name '$shard' must match ${ShardName.regex} (it is a directory name and a JSON offset key)")
-    val dir = root.resolve(shard)
-    Files.createDirectories(dir)
-    val tmp = Files.createTempFile(dir, ".tmp", ".recb")
+                   payloads: Seq[Array[Byte]]): Path =
+    staged(root, shard, ".recb", writeFrames(payloads))(replace(_, _, seq, ".recb"))
+
+  private[streaming] def writeLines(lines: Seq[String])(tmp: Path): Unit =
+    Files.write(tmp, lines.asJava, StandardCharsets.UTF_8)
+
+  private[streaming] def writeFrames(payloads: Seq[Array[Byte]])(tmp: Path): Unit = {
     val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
       Files.newOutputStream(tmp)))
     try payloads.foreach { p => out.writeInt(p.length); out.write(p) }
     finally out.close()
-    Files.move(tmp, dir.resolve(f"$seq%08d.recb"),
+  }
+
+  /** Write a record file under a hidden temp name in `<root>/<shard>`
+    * and hand (shard dir, temp file) to `place`, which publishes it; the
+    * temp name is removed whatever happens. */
+  private[streaming] def staged[T](root: Path, shard: String, ext: String,
+                                   write: Path => Unit)(place: (Path, Path) => T): T = {
+    require(ShardName.matches(shard),
+      s"shard name '$shard' must match ${ShardName.regex} (it is a directory name and a JSON offset key)")
+    val dir = root.resolve(shard)
+    Files.createDirectories(dir)
+    val tmp = Files.createTempFile(dir, ".tmp", ext)
+    try { write(tmp); place(dir, tmp) } finally Files.deleteIfExists(tmp)
+  }
+
+  private def recName(seq: Long, ext: String): String = f"$seq%08d$ext"
+
+  private def replace(dir: Path, tmp: Path, seq: Long, ext: String): Path =
+    Files.move(tmp, dir.resolve(recName(seq, ext)),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+
+  /** Publish a staged file at `seq` only while that sequence is free.
+    * The hard link (link(2)) fails with FileAlreadyExistsException on an
+    * existing name, where a move (rename(2)) would replace it silently;
+    * the other layout's name at `seq` counts as taken too. */
+  private[streaming] def link(dir: Path, tmp: Path, seq: Long, ext: String): Path = {
+    val other = dir.resolve(recName(seq, if (ext == ".rec") ".recb" else ".rec"))
+    if (Files.exists(other)) throw new FileAlreadyExistsException(other.toString)
+    Files.createLink(dir.resolve(recName(seq, ext)), tmp)
   }
 
   /** Files.list returns an open directory stream that MUST be closed:
@@ -112,22 +136,35 @@ object ShardedLog {
     else withDirStream(root)(_.filter(Files.isDirectory(_)).toSeq)
       .sortBy(_.getFileName.toString)
 
-  /** (seq, path, mtimeMicros) of record files in a shard, seq-ascending.
-    * Covers both layouts: `.rec` (UTF-8 lines) and `.recb`
-    * (length-prefixed binary payloads, [[appendBinary]]). */
+  /** The sequence a record file name carries: `.rec` (UTF-8 lines) and
+    * `.recb` (length-prefixed binary payloads, [[appendBinary]]); None
+    * for temp files and anything else. */
+  private def seqOf(p: Path): Option[Long] = {
+    val n = p.getFileName.toString
+    if (n.startsWith(".")) None
+    else if (n.endsWith(".recb")) n.stripSuffix(".recb").toLongOption
+    else if (n.endsWith(".rec")) n.stripSuffix(".rec").toLongOption
+    else None
+  }
+
+  /** (seq, path) of record files in a shard, seq-ascending, from the
+    * names alone: no file is stat'ed. */
+  private[streaming] def listSeqs(shardDir: Path): Seq[(Long, Path)] =
+    withDirStream(shardDir)(_.flatMap(p => seqOf(p).map(_ -> p)).toSeq).sortBy(_._1)
+
+  /** Highest record sequence in a shard (0 when it has none or does not
+    * exist), from the names alone. */
+  private[streaming] def maxSeq(shardDir: Path): Long =
+    if (!Files.isDirectory(shardDir)) 0L
+    else withDirStream(shardDir)(_.flatMap(seqOf).maxOption).getOrElse(0L)
+
+  private[streaming] def mtimeUs(p: Path): Long =
+    Files.getLastModifiedTime(p).toMillis * 1000L
+
+  /** (seq, path, mtimeMicros) of record files in a shard, seq-ascending:
+    * [[listSeqs]] plus one stat per file. */
   private[streaming] def listFiles(shardDir: Path): Seq[(Long, Path, Long)] =
-    withDirStream(shardDir) {
-      _.flatMap { p =>
-        val n = p.getFileName.toString
-        val stem =
-          if (n.startsWith(".")) None
-          else if (n.endsWith(".recb")) Some(n.stripSuffix(".recb"))
-          else if (n.endsWith(".rec")) Some(n.stripSuffix(".rec"))
-          else None
-        stem.flatMap(_.toLongOption).map(seq =>
-          (seq, p, Files.getLastModifiedTime(p).toMillis * 1000L))
-      }.toSeq
-    }.sortBy(_._1)
+    listSeqs(shardDir).map { case (seq, p) => (seq, p, mtimeUs(p)) }
 
   /** Declare `child` as the product of resharding `parent`: the source
     * will not admit the child's records until every parent record
@@ -275,6 +312,11 @@ class ShardedLogMicroBatchStream(options: CaseInsensitiveStringMap)
     availableNowCap = Some(currentMax())
   }
 
+  /** The live frontier the last [[latestOffset]] described. The engine
+    * calls [[reportLatestOffset]] right after it in the same trigger, so
+    * one describe serves both (Kafka's source does the same). */
+  @volatile private var lastLive: Option[Map[String, Long]] = None
+
   /** The per-shard max this run may advance to: the AvailableNow
     * snapshot when set, else the live listing. */
   private def frontier(): Map[String, Long] =
@@ -312,9 +354,10 @@ class ShardedLogMicroBatchStream(options: CaseInsensitiveStringMap)
   private def currentMax(): Map[String, Long] = currentState()._1
 
   override def initialOffset(): Offset = {
+    // under AvailableNow the snapshot is the frontier at query start
     val init = startingPosition match {
-      case "trim_horizon" => currentMax().map { case (s, _) => s -> 0L }
-      case "latest" => currentMax()
+      case "trim_horizon" => frontier().map { case (s, _) => s -> 0L }
+      case "latest" => frontier()
       case "at_timestamp" =>
         val ts = timestampMs.getOrElse(throw new IllegalArgumentException(
           "at_timestamp requires 'timestampMs'"))
@@ -342,8 +385,17 @@ class ShardedLogMicroBatchStream(options: CaseInsensitiveStringMap)
   // no-loss-but-unordered behavior.
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val from = start.asInstanceOf[ShardedLogOffset].consumed
-    val (liveMaxes, parents) = currentState()
-    val maxes = availableNowCap.getOrElse(liveMaxes)
+    // an AvailableNow snapshot that `from` has reached admits nothing
+    // more and no parent gate can hold: skip the describe
+    val drained = availableNowCap.exists(_.forall { case (shard, m) =>
+      from.getOrElse(shard, 0L) >= m })
+    val (maxes, parents) =
+      if (drained) (availableNowCap.get, Map.empty[String, Seq[String]])
+      else {
+        val (liveMaxes, parents) = currentState()
+        lastLive = Some(liveMaxes)
+        (availableNowCap.getOrElse(liveMaxes), parents)
+      }
     val capped = maxes.flatMap { case (shard, maxSeq) =>
       val s = from.getOrElse(shard, 0L)
       val gatedByParent = s == 0L && parents.getOrElse(shard, Nil).exists { p =>
@@ -366,8 +418,11 @@ class ShardedLogMicroBatchStream(options: CaseInsensitiveStringMap)
 
   /** True (uncapped) latest, so processAllAvailable keeps triggering
     * until the rate-limited batches catch up (bounded by the
-    * AvailableNow snapshot when one is armed). */
-  override def reportLatestOffset(): Offset = ShardedLogOffset(frontier())
+    * AvailableNow snapshot when one is armed): the frontier this
+    * trigger's [[latestOffset]] described, or a fresh describe when no
+    * latestOffset has run yet. */
+  override def reportLatestOffset(): Offset =
+    ShardedLogOffset(availableNowCap.orElse(lastLive).getOrElse(currentMax()))
 
   override def latestOffset(): Offset =
     throw new UnsupportedOperationException(

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
+import java.util.concurrent.ConcurrentHashMap
 import scala.collection.concurrent.TrieMap
 
 /** The injectable client seam — "bring your own transport".
@@ -120,9 +121,12 @@ trait ShardReader extends Serializable {
 
   /** Current shards with their declared reshard parents — the
     * describeStream call (reference KinesisSource.scala:115-141). Called
-    * every micro-batch, so discovery of split/merge children is
-    * continuous, as in the reference's handleReshard
-    * (KinesisSource.scala:229-235). */
+    * once per trigger, from the source's `latestOffset` (its
+    * `reportLatestOffset` reuses that answer), so discovery of
+    * split/merge children is continuous, as in the reference's
+    * handleReshard (KinesisSource.scala:229-235); plus once at query
+    * start. A Trigger.AvailableNow run describes once for its snapshot,
+    * then once per batch until the snapshot is drained. */
   def describeShards(): Seq[Transport.ShardInfo]
 
   /** Highest sequence currently present in `shard` (0 when empty) — the
@@ -182,14 +186,10 @@ final class FileShardReader(rootStr: String) extends ShardReader {
     ShardedLog.listShards(root).map { d =>
       val name = d.getFileName.toString
       Transport.ShardInfo(name, ShardedLog.parentsOf(root, name),
-        maxSeq = Some(maxSequence(name)))
+        maxSeq = Some(ShardedLog.maxSeq(d)))
     }
 
-  override def maxSequence(shard: String): Long = {
-    val dir = root.resolve(shard)
-    if (!Files.isDirectory(dir)) 0L
-    else ShardedLog.listFiles(dir).lastOption.map(_._1).getOrElse(0L)
-  }
+  override def maxSequence(shard: String): Long = ShardedLog.maxSeq(root.resolve(shard))
 
   override def sequenceAtTimestamp(shard: String, tsUs: Long): Long = {
     val dir = root.resolve(shard)
@@ -202,10 +202,13 @@ final class FileShardReader(rootStr: String) extends ShardReader {
       .lastOption.map(_._1).getOrElse(0L)
   }
 
+  /** One names-only listing of the shard; only the files in the range
+    * are stat'ed, for the arrival timestamp (`ts`). */
   override def read(shard: String, afterSeq: Long, toSeq: Long): Iterator[Transport.Rec] =
-    ShardedLog.listFiles(root.resolve(shard)).iterator
-      .filter { case (seq, _, _) => seq > afterSeq && seq <= toSeq }
-      .flatMap { case (seq, p, mtUs) =>
+    ShardedLog.listSeqs(root.resolve(shard)).iterator
+      .filter { case (seq, _) => seq > afterSeq && seq <= toSeq }
+      .flatMap { case (seq, p) =>
+        val mtUs = ShardedLog.mtimeUs(p)
         ShardedLog.readRecPayloads(p).map(payload =>
           Transport.Rec.ofBytes(shard, seq, payload, mtUs))
       }
@@ -215,47 +218,64 @@ final class FileShardReader(rootStr: String) extends ShardReader {
   * durable local counterpart of [[FileShardReader]]: hash-routes each
   * partition key to one of `numShards` shard directories (the same
   * key→shard affinity contract as Kinesis partition keys) and appends
-  * one record file per flush per shard through ShardedLog.append
-  * (write-temp + atomic move, so a concurrently tailing reader never
-  * observes a torn file). With [[BatchingSink.over]] on top this is the
-  * full reference sink semantics against local durable storage.
+  * one record file per flush per shard (written under a temp name, then
+  * published whole, so a concurrently tailing reader never observes a
+  * torn file). With [[BatchingSink.over]] on top this is the full
+  * reference sink semantics against local durable storage.
   *
-  * Concurrency: sequence allocation is serialized per (root, shard)
-  * through a JVM-global lock, so the many per-partition sink instances
-  * of a local[n] job cannot allocate the same file sequence and
-  * replace each other's flushes (multi-JVM writers to one root would
-  * still race — that deployment belongs on a real shared-log
-  * transport, not local files). Payload contract: a flush whose
+  * Concurrency: each instance allocates sequences per shard from its
+  * own counter, seeded once from a names-only listing of the shard, so
+  * a put costs O(records) and never lists. Under the shard's lock the
+  * flush is published at `last + 1` with a hard link, which fails on an
+  * existing name instead of replacing it ([[ShardedLog.link]]). A
+  * collision means another writer (another instance, another JVM
+  * sharing the root, or a direct [[ShardedLog.append]]) took that
+  * sequence: the counter is re-seeded from a listing and the publish
+  * retried. Nothing is overwritten, and since a writer publishes `n+1`
+  * only once `n` exists, a reader that admits up to `n+1` never skips
+  * `n`. One gap is left: two writers that publish one sequence in
+  * different layouts (a text and a binary flush) at the same instant can
+  * both land at it, and a reader that already passed it misses the later
+  * file; the shard's other-layout name is checked before the link, so
+  * only a true race hits it. Payload contract: a flush whose
   * payloads are all newline-free UTF-8 text lands in the
   * human-readable line layout (`.rec`); any flush carrying a payload
   * that would not survive that round-trip (embedded newlines,
   * non-UTF-8 bytes) is written whole as a length-prefixed binary file
-  * (`.recb`, [[ShardedLog.appendBinary]]) — byte-exact either way, the
+  * (`.recb`) — byte-exact either way, the
   * reference's format-agnostic ByteBuffer contract (reference
   * KinesisSource.scala:68-70). */
 final class FileRecordWriter(rootStr: String, numShards: Int = 4) extends RecordWriter {
-  import FileRecordWriter.lockFor
+  /** Per shard: the last sequence this instance published or saw (-1
+    * until seeded). The slot is also the shard's lock. */
+  @transient private lazy val slots = new ConcurrentHashMap[String, FileRecordWriter.Slot]()
+
   override def putRecords(records: Seq[(String, Array[Byte])]): Seq[BatchingSink.PutResult] = {
     val root = Paths.get(rootStr)
     records.groupBy { case (k, _) => "shard-" + math.floorMod(k.hashCode, numShards) }
       .foreach { case (shard, recs) =>
         val payloads = recs.map(_._2)
-        val asLines: Option[Seq[String]] = {
-          val decoded = payloads.map(p => new String(p, StandardCharsets.UTF_8))
+        val decoded = payloads.map(p => new String(p, StandardCharsets.UTF_8))
+        val (ext, write) =
           if (decoded.lazyZip(payloads).forall { (line, p) =>
               !line.exists(c => c == '\n' || c == '\r') &&
                 java.util.Arrays.equals(line.getBytes(StandardCharsets.UTF_8), p)
-            }) Some(decoded)
-          else None
-        }
-        lockFor(rootStr, shard).synchronized {
-          val dir = root.resolve(shard)
-          val next = (if (Files.isDirectory(dir))
-            ShardedLog.listFiles(dir).lastOption.map(_._1).getOrElse(0L)
-          else 0L) + 1L
-          asLines match {
-            case Some(lines) => ShardedLog.append(root, shard, next, lines)
-            case None => ShardedLog.appendBinary(root, shard, next, payloads)
+            }) (".rec", ShardedLog.writeLines(decoded) _)
+          else (".recb", ShardedLog.writeFrames(payloads) _)
+        val slot = slots.computeIfAbsent(shard, _ => new FileRecordWriter.Slot)
+        // the lock spans staging too, so one instance's files keep
+        // mtimes monotone with their sequence (at_timestamp relies on it)
+        slot.synchronized {
+          ShardedLog.staged(root, shard, ext, write) { (dir, tmp) =>
+            if (slot.last < 0) slot.last = ShardedLog.maxSeq(dir)
+            var published = false
+            while (!published) {
+              try { ShardedLog.link(dir, tmp, slot.last + 1, ext); published = true }
+              catch {
+                case _: FileAlreadyExistsException => slot.last = ShardedLog.maxSeq(dir)
+              }
+            }
+            slot.last += 1
           }
         }
       }
@@ -264,9 +284,7 @@ final class FileRecordWriter(rootStr: String, numShards: Int = 4) extends Record
 }
 
 object FileRecordWriter {
-  private val locks = TrieMap.empty[(String, String), Object]
-  private def lockFor(root: String, shard: String): Object =
-    locks.getOrElseUpdate((root, shard), new Object)
+  private final class Slot { var last: Long = -1L }
 }
 
 /** Both transport sides over a JVM-local in-memory log — the test fake

@@ -83,6 +83,118 @@ class TransportSpec extends SparkSpec {
     } finally TransportRegistry.unregister(id)
   }
 
+  test("one describeShards per trigger: an N-batch maxFilesPerTrigger drain describes at most N + 2 times") {
+    // One describe serves a trigger's latestOffset and its
+    // reportLatestOffset; the extra calls allowed are query start
+    // (initialOffset) and the AvailableNow snapshot.
+    import graft.streaming.{FileShardReader, ShardReader}
+    import org.apache.spark.sql.streaming.Trigger
+    val root = Files.createTempDirectory("fr-describe")
+    (1 to 3).foreach(s => (1 to 16).foreach(i => ShardedLog.append(root, s"s$s", i, Seq(s"s$s-$i"))))
+    val inner = new FileShardReader(root.toString)
+    val counting = new ShardReader {
+      val describes = new java.util.concurrent.atomic.AtomicInteger(0)
+      override def describeShards() = { describes.incrementAndGet(); inner.describeShards() }
+      override def maxSequence(shard: String) = inner.maxSequence(shard)
+      override def sequenceAtTimestamp(shard: String, tsUs: Long) =
+        inner.sequenceAtTimestamp(shard, tsUs)
+      override def read(shard: String, afterSeq: Long, toSeq: Long) =
+        inner.read(shard, afterSeq, toSeq)
+    }
+    val id = freshId()
+    TransportRegistry.register(id, counting)
+    def run(availableNow: Boolean): (Int, Int, Int) = {
+      counting.describes.set(0)
+      val w = spark.readStream.format(ShardedLog.Format).option("transport", id)
+        .option("maxFilesPerTrigger", "2").load()
+        .writeStream.format("memory")
+        .queryName("tr_" + java.util.UUID.randomUUID().toString.replace("-", ""))
+        .option("checkpointLocation", Files.createTempDirectory("ckpt").toString)
+      val q =
+        if (availableNow) {
+          val q = w.trigger(Trigger.AvailableNow()).start()
+          assert(q.awaitTermination(60000), "AvailableNow drain did not terminate")
+          q
+        } else {
+          val q = w.start(); q.processAllAvailable(); q.stop(); q
+        }
+      val batches = q.recentProgress.filter(_.numInputRows > 0)
+      (batches.length, batches.map(_.numInputRows.toInt).sum, counting.describes.get)
+    }
+    try {
+      val (n, rows, describes) = run(availableNow = true)
+      assert((n, rows) === ((8, 48)))
+      assert(describes <= n + 2, s"AvailableNow: $describes describes for $n batches")
+      val (n2, rows2, describes2) = run(availableNow = false)
+      assert((n2, rows2) === ((8, 48)))
+      // idle triggers (the one processAllAvailable waits for, and any
+      // that start before stop) add a describe each, so bound the
+      // per-batch rate: two describes per trigger would be >= 2N
+      assert(describes2 < 2 * n2, s"processAllAvailable: $describes2 describes for $n2 batches")
+    } finally TransportRegistry.unregister(id)
+  }
+
+  test("FileRecordWriter instances on one root never overwrite or lose a flush, and keep their order") {
+    import graft.streaming.{FileRecordWriter, FileShardReader}
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("fw-two")
+    val shardDir = root.resolve("shard-0")
+    val ws = Seq.fill(2)(new FileRecordWriter(root.toString, numShards = 1))
+    def put(w: Int, tag: String): Unit =
+      ws(w).putRecords(Seq(("k", tag.getBytes("UTF-8"))))
+    def recFiles(): Map[String, Seq[String]] =
+      if (!Files.isDirectory(shardDir)) Map.empty
+      else {
+        val s = Files.list(shardDir)
+        try s.iterator().asScala.map(_.getFileName.toString)
+          .filter(n => !n.startsWith(".") && n.endsWith(".rec")).toVector
+          .flatMap(n => scala.util.Try(Files.readAllLines(shardDir.resolve(n)).asScala.toSeq)
+            .toOption.map(n -> _)).toMap
+        finally s.close()
+      }
+    // a watcher records each file's content the first time it sees it;
+    // a published file must never read differently later
+    val firstSeen = new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
+    @volatile var watching = true
+    val watcher = new Thread(() => while (watching) recFiles().foreach { case (n, c) =>
+      firstSeen.putIfAbsent(n, c) })
+    watcher.start()
+    // 1. the two instances alternate: each one's cached sequence is
+    //    stale on every put
+    (1 to 10).foreach { i => put(0, s"w0-alt-$i"); put(1, s"w1-alt-$i") }
+    // 2. a direct append takes the sequence instance 0 would use next
+    put(0, "w0-before-direct")
+    val next = new FileShardReader(root.toString).maxSequence("shard-0") + 1
+    ShardedLog.append(root, "shard-0", next, Seq("direct"))
+    put(0, "w0-after-direct")
+    // 3. 4 threads x 2 instances hammer the shard
+    val threads = for (w <- 0 to 1; t <- 1 to 4) yield new Thread(() =>
+      (1 to 25).foreach(i => put(w, s"w$w-t$t-$i")))
+    threads.foreach(_.start()); threads.foreach(_.join())
+    watching = false; watcher.join()
+    val id = freshId()
+    TransportRegistry.register(id, new FileShardReader(root.toString))
+    try {
+      val rows = drain(id).select($"seq", $"value").as[(Long, String)].collect().toSeq
+      val expected = (1 to 10).flatMap(i => Seq(s"w0-alt-$i", s"w1-alt-$i")) ++
+        Seq("w0-before-direct", "direct", "w0-after-direct") ++
+        (for (w <- 0 to 1; t <- 1 to 4; i <- 1 to 25) yield s"w$w-t$t-$i")
+      assert(rows.map(_._2).sorted === expected.sorted, "every record exactly once")
+      assert(rows.map(_._1).distinct.length === rows.length, "one record per sequence")
+      val seqOf = rows.map(_.swap).toMap
+      assert(seqOf("w0-before-direct") < seqOf("direct") && seqOf("direct") < seqOf("w0-after-direct"))
+      // each writer's puts land in the order it made them
+      def ordered(tags: Seq[String]): Boolean = tags.map(seqOf).sliding(2).forall(p => p(0) < p(1))
+      (0 to 1).foreach(w => assert(ordered((1 to 10).map(i => s"w$w-alt-$i"))))
+      for (w <- 0 to 1; t <- 1 to 4) assert(ordered((1 to 25).map(i => s"w$w-t$t-$i")))
+      val finalFiles = recFiles()
+      assert(firstSeen.size > 0)
+      firstSeen.asScala.foreach { case (n, c) =>
+        assert(finalFiles.get(n) === Some(c), s"$n changed after it was published")
+      }
+    } finally TransportRegistry.unregister(id)
+  }
+
   test("FileRecordWriter carries line-breaking payloads via the binary layout, byte-exact") {
     // Formerly a ClientException rejection; since the binary-fidelity
     // change the writer is serialization-format agnostic (the reference
