@@ -242,9 +242,19 @@ object Bench {
           else if (firstOkAt <= warmLateThresh)
             math.min(firstOkAt + warmBase, warmCap)
           else math.max(firstOkAt, warmBase) // late success: no extension
+        // Set (under `it`'s lock) once the main thread leaves the grace
+        // loop: no warm entry starts after that, whatever a late first
+        // success does to warmDeadline — otherwise a late worker released
+        // by it could run warm work over pass 1.
+        @volatile var warmClosed = false
+        // workers that took an entry; only these can be in flight
+        val startedWorkers = java.util.concurrent.ConcurrentHashMap.newKeySet[Thread]()
         def nextWarm(): Option[(SparkSession, String) => org.apache.spark.sql.DataFrame] =
           it.synchronized {
-            if (it.hasNext && elapsed < warmDeadline) Some(it.next()._2) else None
+            if (!warmClosed && it.hasNext && elapsed < warmDeadline) {
+              startedWorkers.add(Thread.currentThread())
+              Some(it.next()._2)
+            } else None
           }
         // Swallowed warmup failures are COUNTED and surfaced below: the
         // concurrent workers tolerate a racy temp-view loss, but an
@@ -274,7 +284,7 @@ object Bench {
               // warmBase+10 bound made them exit permanently when the
               // first success landed between warmBase+10 and the cap,
               // leaving only the 2 scouts to use the reopened window)
-              while (firstDone.getCount > 0 &&
+              while (!warmClosed && firstDone.getCount > 0 &&
                      elapsed < math.max(warmBase, warmLateThresh) + 10.0)
                 firstDone.await(200, java.util.concurrent.TimeUnit.MILLISECONDS)
             }
@@ -302,7 +312,11 @@ object Bench {
         def graceEnd: Double = warmDeadline + 10.0
         while (workers.exists(_.isAlive) && elapsed < graceEnd)
           workers.foreach(_.join(250))
-        if (workers.exists(_.isAlive)) {
+        it.synchronized { warmClosed = true }
+        // a worker still parked on firstDone never started an entry and
+        // now exits on its own: only started ones need cancelling
+        def inFlight: Boolean = workers.exists(t => t.isAlive && startedWorkers.contains(t))
+        if (inFlight) {
           println(s"""{"bench_note":"warmup cancelled at ${"%.0f".format(elapsed)}s (grace exceeded)"}""")
           // cancelAllJobs only kills currently-ACTIVE jobs: a warm entry
           // mid-flight can launch its next internal job after one cancel
@@ -311,12 +325,12 @@ object Bench {
           // and if one still survives the bound, record the contamination
           // risk in the artifact rather than measuring over it silently.
           var tries = 0
-          while (workers.exists(_.isAlive) && tries < 5) {
+          while (inFlight && tries < 5) {
             spark.sparkContext.cancelAllJobs()
             workers.foreach(_.join(2000))
             tries += 1
           }
-          if (workers.exists(_.isAlive))
+          if (inFlight)
             println(s"""{"bench_note":"warmup worker survived cancellation — pass-1 timings may be contaminated"}""")
         }
         // The sampler puts ONE s-entry in the first four measured

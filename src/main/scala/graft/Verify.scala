@@ -58,10 +58,10 @@ object Verify {
     // kills Verify on a wall budget, and a ~3x shorter loop turns a
     // slow-phase kill into a non-event (with oracle_sql.json written
     // first, a kill already only costs the unfinished tail).
-    // SPARK_GRAFT_VERIFY_THREADS=1 restores the sequential loop with
-    // its per-query cache clear; concurrent mode leaves persisted
-    // intermediates to Spark's LRU storage eviction instead (a clear
-    // from one worker would yank a concurrent entry's cache mid-job).
+    // SPARK_GRAFT_VERIFY_THREADS sets the number of workers (one runs
+    // the entries in order); persisted intermediates are left to Spark's
+    // LRU storage eviction plus the periodic clear below (a per-entry
+    // clear from one worker would yank a concurrent entry's cache mid-job).
     // validated parse: a malformed override must not crash the dump
     // after JVM+Spark startup (it would zero the round's correctness)
     val nThreads = sys.env.get("SPARK_GRAFT_VERIFY_THREADS")
@@ -70,55 +70,43 @@ object Verify {
     val it = selected.iterator
     def nextEntry(): Option[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
       it.synchronized { if (it.hasNext) Some(it.next()) else None }
-    def runOne(name: String,
-               fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        // per-query done-line so a partial (killed) run is diagnosable
-        // from the log: which entry was in flight, how far the loop got.
-        println(f"[verify] $name done ${(System.nanoTime() - t0) / 1e9}%.1fs (${done.incrementAndGet()}/${selected.size})")
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
-    if (nThreads == 1) {
-      selected.foreach { case (name, fn) =>
-        runOne(name, fn)
-        // free any caches a query persisted before the next one runs
-        spark.catalog.clearCache()
-      }
-    } else {
-      // Bounded cache accumulation: the suite's entries persist dozens
-      // of anonymous intermediates they never unpersist (the sequential
-      // loop cleared per entry). A periodic clear bounds storage growth
-      // over the run; it may yank a concurrent entry's persist mid-job,
-      // which only costs that entry a recompute, and the blast radius
-      // is the <= nThreads in-flight entries. Two contracts make the
-      // clear safe: (1) NO entry may lean on persist() for CORRECTNESS
-      // — materializations whose recompute could differ (nondeterminism
-      // like spark_partition_id; e26's pid↔offset pairing) must use
-      // localCheckpoint, which this clear cannot touch; (2) the clear
-      // may evict util.CorpusMemo's over-cap frame, which lives as long
-      // as its corpus (CorpusMemo.rows persists it again for the next
-      // consumer, so the cost is one recompute, never a permanently
-      // uncached plan).
-      // If the clear cadence ever tightens, re-check both.
-      val processed = new java.util.concurrent.atomic.AtomicInteger(0)
-      val workers = (1 to nThreads).map { _ =>
-        val t = new Thread(() => {
-          var cur = nextEntry()
-          while (cur.isDefined) {
-            runOne(cur.get._1, cur.get._2)
-            if (processed.incrementAndGet() % 32 == 0) spark.catalog.clearCache()
-            cur = nextEntry()
+    // Bounded cache accumulation: the suite's entries persist dozens
+    // of anonymous intermediates they never unpersist. A periodic clear
+    // bounds storage growth over the run; it may yank a concurrent
+    // entry's persist mid-job, which only costs that entry a recompute,
+    // and the blast radius is the <= nThreads in-flight entries. Two
+    // contracts make the clear safe: (1) NO entry may lean on persist()
+    // for CORRECTNESS — materializations whose recompute could differ
+    // (nondeterminism like spark_partition_id; e26's pid↔offset
+    // pairing) must use localCheckpoint, which this clear cannot touch;
+    // (2) the clear may evict util.CorpusMemo's over-cap frame, which
+    // lives as long as its corpus (CorpusMemo.rows persists it again
+    // for the next consumer, so the cost is one recompute, never a
+    // permanently uncached plan).
+    // If the clear cadence ever tightens, re-check both.
+    val processed = new java.util.concurrent.atomic.AtomicInteger(0)
+    val workers = (1 to nThreads).map { _ =>
+      val t = new Thread(() => {
+        var cur = nextEntry()
+        while (cur.isDefined) {
+          val (name, fn) = cur.get
+          val t0 = System.nanoTime()
+          try {
+            fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+              .parquet(s"$outDir/$name")
+            // per-query done-line so a partial (killed) run is diagnosable
+            // from the log: which entry was in flight, how far the loop got.
+            println(f"[verify] $name done ${(System.nanoTime() - t0) / 1e9}%.1fs (${done.incrementAndGet()}/${selected.size})")
+          } catch { case e: Throwable =>
+            System.err.println(s"[verify] $name failed: ${e.getMessage}")
           }
-        })
-        t.start(); t
-      }
-      workers.foreach(_.join())
+          if (processed.incrementAndGet() % 32 == 0) spark.catalog.clearCache()
+          cur = nextEntry()
+        }
+      })
+      t.start(); t
     }
+    workers.foreach(_.join())
     spark.stop()
   }
 }

@@ -204,6 +204,14 @@ final class KinesisShardReader(
   private def getPage(it: String): RecordsPage =
     withTaxonomyRetry(port.getRecords(it, pollLimit))
 
+  /** One page from `it`; an expired iterator is reissued once, by
+    * `reissue` (positioned after the caller's last delivered record),
+    * and the page is fetched from the fresh one. The caller continues
+    * from the page's `nextIterator`, never from the reissued cursor. */
+  private def pageOrReissue(it: String)(reissue: => String): RecordsPage =
+    try getPage(it)
+    catch { case _: ExpiredIteratorException => getPage(reissue) }
+
   private def getIterator(shard: String, typ: String,
                           startSeq: Option[String],
                           tsUs: Option[Long] = None): String =
@@ -236,12 +244,7 @@ final class KinesisShardReader(
     var open = true
     var caughtUp = false
     while (!caughtUp) {
-      val page =
-        try getPage(it)
-        catch { case _: ExpiredIteratorException =>
-          it = iteratorAfter(shard, led.entries.lastOption.map(_._1))
-          getPage(it)
-        }
+      val page = pageOrReissue(it)(iteratorAfter(shard, led.entries.lastOption.map(_._1)))
       led = led.copy(entries = led.entries ++
         page.records.map(r => (r.sequenceNumber, r.arrivalUs)))
       page.nextIterator match {
@@ -334,11 +337,7 @@ final class KinesisShardReader(
     var done = false
     var sawAtOrAfter = false // a record >= tsUs makes the anchor final
     while (!done && it.isDefined) {
-      val page =
-        try getPage(it.get)
-        catch { case _: ExpiredIteratorException =>
-          it = Some(iteratorAfter(shard, lastSeq)); getPage(it.get)
-        }
+      val page = pageOrReissue(it.get)(iteratorAfter(shard, lastSeq))
       page.records.foreach { r =>
         if (!done) {
           if (r.arrivalUs < tsUs) count += 1
@@ -379,12 +378,7 @@ final class KinesisShardReader(
 
       private def fill(): Unit =
         while (buf.isEmpty && remaining > 0 && cursor.isDefined) {
-          val page =
-            try getPage(cursor.get)
-            catch { case _: ExpiredIteratorException =>
-              cursor = Some(iteratorAfter(shard, lastSeq))
-              getPage(cursor.get)
-            }
+          val page = pageOrReissue(cursor.get)(iteratorAfter(shard, lastSeq))
           buf ++= page.records
           cursor = page.nextIterator
           if (page.records.isEmpty && page.millisBehindLatest <= 0L &&
@@ -415,9 +409,8 @@ final class KinesisShardReader(
         val r = buf.dequeue()
         pos += 1; remaining -= 1; lastSeq = Some(r.sequenceNumber)
         // byte-preserving: the reference delivers raw ByteBuffers
-        // (KinesisSource.scala:68-70) — non-UTF-8 payloads keep their
-        // exact bytes in Rec.bin, `value` is only the text view
-        Transport.Rec.ofBytes(shard, pos, r.payload, r.arrivalUs)
+        // (KinesisSource.scala:68-70), and a Rec is its exact bytes
+        Transport.Rec(shard, pos, r.payload, r.arrivalUs)
       }
     }
   }

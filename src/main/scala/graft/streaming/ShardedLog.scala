@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, StandardCopyOption}
 import java.util
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -19,11 +19,15 @@ import scala.jdk.CollectionConverters._
   * source — the Spark-native re-expression of the reference's
   * backpressured sharded-stream reader (reference KinesisSource.scala).
   *
-  * Layout: `<path>/<shard>/<seq>.rec` (a batch of UTF-8 line records)
-  * or `<seq>.recb` (length-prefixed binary payloads — the reference is
-  * serialization-format agnostic and streams raw ByteBuffers, reference
-  * KinesisSource.scala:68-70), appended atomically; `<seq>` is a
-  * zero-padded per-shard sequence number. Mapping of reference
+  * Layout: `<path>/<shard>/<seq>.recb`, one file per flush, published
+  * whole; `<seq>` is a zero-padded per-shard sequence number. A file is
+  * a run of frames, each a 4-byte big-endian length followed by that
+  * record's exact bytes: records are bytes, as in the reference, which
+  * is serialization-format agnostic and streams raw ByteBuffers
+  * (reference KinesisSource.scala:68-70). Text records are their UTF-8
+  * bytes. A `.rec` file (the line layout of older graft versions) in a
+  * shard fails listing and reads fast rather than being skipped, since
+  * skipping it would lose its records. Mapping of reference
   * semantics:
   *
   *   - iterator types (KinesisSource.scala:29-35) → `startingPosition`
@@ -42,7 +46,7 @@ import scala.jdk.CollectionConverters._
   *   - backpressure (demand-driven fetch) → `maxFilesPerTrigger` caps
   *     how far `latestOffset` advances each shard per micro-batch;
   *   - per-shard ordering: one input partition per shard per batch,
-  *     files and lines read in sequence order.
+  *     files and frames read in sequence order.
   *
   * Scale: shards are the unit of parallelism (shard→partition), state
   * per query is O(#shards) longs, and record payloads stay on executors.
@@ -62,29 +66,19 @@ object ShardedLog {
 
   private val ShardName = "[A-Za-z0-9_-]+".r
 
+  private val Ext = ".recb"
+
   /** Append one record file atomically (write temp + rename) so readers
-    * never observe partial files. This is the REPLACE contract: a file
-    * already at `seq` is replaced, so an epoch replay (checkpoint
-    * recovery re-running `ShardedLogWriter`'s foreachBatch) is
-    * idempotent, not duplicating. A writer that allocates sequences
-    * itself ([[FileRecordWriter]]) publishes through [[link]] instead,
-    * which never replaces. Returns the file's path. */
+    * never observe partial files; each line is one record, stored as its
+    * UTF-8 bytes. This is the REPLACE contract: a file already at `seq`
+    * is replaced, so an epoch replay (checkpoint recovery re-running
+    * `ShardedLogWriter`'s foreachBatch) is idempotent, not duplicating.
+    * A writer that allocates sequences itself ([[FileRecordWriter]])
+    * publishes through [[link]] instead, which never replaces. Returns
+    * the file's path. */
   def append(root: Path, shard: String, seq: Long, lines: Seq[String]): Path =
-    staged(root, shard, ".rec", writeLines(lines))(replace(_, _, seq, ".rec"))
-
-  /** Binary sibling of [[append]] for payloads that do not survive the
-    * line-oriented UTF-8 layout (the reference's stream is raw
-    * ByteBuffers, KinesisSource.scala:68-70): `<seq>.recb`, each record a
-    * 4-byte big-endian length followed by its exact bytes. Same
-    * atomicity and idempotent-replace contract as the text form; one
-    * file holds one flush, so the per-shard sequence space is shared
-    * with `.rec` files. */
-  def appendBinary(root: Path, shard: String, seq: Long,
-                   payloads: Seq[Array[Byte]]): Path =
-    staged(root, shard, ".recb", writeFrames(payloads))(replace(_, _, seq, ".recb"))
-
-  private[streaming] def writeLines(lines: Seq[String])(tmp: Path): Unit =
-    Files.write(tmp, lines.asJava, StandardCharsets.UTF_8)
+    staged(root, shard, writeFrames(lines.map(_.getBytes(StandardCharsets.UTF_8))))(
+      replace(_, _, seq))
 
   private[streaming] def writeFrames(payloads: Seq[Array[Byte]])(tmp: Path): Unit = {
     val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
@@ -96,31 +90,27 @@ object ShardedLog {
   /** Write a record file under a hidden temp name in `<root>/<shard>`
     * and hand (shard dir, temp file) to `place`, which publishes it; the
     * temp name is removed whatever happens. */
-  private[streaming] def staged[T](root: Path, shard: String, ext: String,
+  private[streaming] def staged[T](root: Path, shard: String,
                                    write: Path => Unit)(place: (Path, Path) => T): T = {
     require(ShardName.matches(shard),
       s"shard name '$shard' must match ${ShardName.regex} (it is a directory name and a JSON offset key)")
     val dir = root.resolve(shard)
     Files.createDirectories(dir)
-    val tmp = Files.createTempFile(dir, ".tmp", ext)
+    val tmp = Files.createTempFile(dir, ".tmp", Ext)
     try { write(tmp); place(dir, tmp) } finally Files.deleteIfExists(tmp)
   }
 
-  private def recName(seq: Long, ext: String): String = f"$seq%08d$ext"
+  private def recName(seq: Long): String = f"$seq%08d$Ext"
 
-  private def replace(dir: Path, tmp: Path, seq: Long, ext: String): Path =
-    Files.move(tmp, dir.resolve(recName(seq, ext)),
+  private def replace(dir: Path, tmp: Path, seq: Long): Path =
+    Files.move(tmp, dir.resolve(recName(seq)),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
 
   /** Publish a staged file at `seq` only while that sequence is free.
     * The hard link (link(2)) fails with FileAlreadyExistsException on an
-    * existing name, where a move (rename(2)) would replace it silently;
-    * the other layout's name at `seq` counts as taken too. */
-  private[streaming] def link(dir: Path, tmp: Path, seq: Long, ext: String): Path = {
-    val other = dir.resolve(recName(seq, if (ext == ".rec") ".recb" else ".rec"))
-    if (Files.exists(other)) throw new FileAlreadyExistsException(other.toString)
-    Files.createLink(dir.resolve(recName(seq, ext)), tmp)
-  }
+    * existing name, where a move (rename(2)) would replace it silently. */
+  private[streaming] def link(dir: Path, tmp: Path, seq: Long): Path =
+    Files.createLink(dir.resolve(recName(seq)), tmp)
 
   /** Files.list returns an open directory stream that MUST be closed:
     * these listings run on the driver every micro-batch (initialOffset,
@@ -136,14 +126,16 @@ object ShardedLog {
     else withDirStream(root)(_.filter(Files.isDirectory(_)).toSeq)
       .sortBy(_.getFileName.toString)
 
-  /** The sequence a record file name carries: `.rec` (UTF-8 lines) and
-    * `.recb` (length-prefixed binary payloads, [[appendBinary]]); None
-    * for temp files and anything else. */
+  /** The sequence a record file name carries; None for temp files and
+    * anything else. A `.rec` name is an older graft's line layout, which
+    * this reader cannot decode: it fails fast (the non-retryable arm of
+    * the read-path taxonomy) instead of silently dropping its records. */
   private def seqOf(p: Path): Option[Long] = {
     val n = p.getFileName.toString
     if (n.startsWith(".")) None
-    else if (n.endsWith(".recb")) n.stripSuffix(".recb").toLongOption
-    else if (n.endsWith(".rec")) n.stripSuffix(".rec").toLongOption
+    else if (n.endsWith(Ext)) n.stripSuffix(Ext).toLongOption
+    else if (n.endsWith(".rec")) throw new IllegalStateException(
+      s"$p: a '.rec' line-layout record file from an older graft; only '$Ext' frames are read")
     else None
   }
 
@@ -197,32 +189,17 @@ object ShardedLog {
       .map(_.trim).filter(_.nonEmpty).toSeq
   }
 
-  /** Read one record file with the reference's read-path error taxonomy
-    * (reference KinesisSource.scala:290-302): client-class errors — the
-    * file is gone or unreadable by construction — fail the task fast
-    * (retrying can never succeed), anything else I/O-shaped is treated
-    * as transient (an object-store throttle / flaky NFS in real life)
-    * and retried with exponential backoff. */
-  def readRecLines(
-      p: Path, tries: Int = 7,
-      onError: (Throwable, Int) => Unit = graft.util.Retry.expBackoff()): Seq[String] =
-    graft.util.Retry.withRetries(tries, onError, retryable = {
-      case _: java.nio.file.NoSuchFileException => false
-      case _: java.nio.file.AccessDeniedException => false
-      case _: java.io.IOException => true
-      case _ => false
-    })(Files.readAllLines(p, StandardCharsets.UTF_8).asScala.toSeq)
-
-  /** Read one record file as byte-exact payloads, whichever layout it
-    * uses: `.recb` → length-prefixed frames; `.rec` → UTF-8 lines
-    * re-encoded (lossless for that layout — its writer only accepts
-    * round-trippable text). Same retry taxonomy as [[readRecLines]]. */
+  /** Read one record file as byte-exact payloads, with the reference's
+    * read-path error taxonomy (reference KinesisSource.scala:290-302):
+    * client-class errors — the file is gone, unreadable or malformed by
+    * construction — fail the task fast (retrying can never succeed),
+    * anything else I/O-shaped is treated as transient (an object-store
+    * throttle / flaky NFS in real life) and retried with exponential
+    * backoff. */
   def readRecPayloads(
       p: Path, tries: Int = 7,
       onError: (Throwable, Int) => Unit = graft.util.Retry.expBackoff()): Seq[Array[Byte]] =
-    if (!p.getFileName.toString.endsWith(".recb"))
-      readRecLines(p, tries, onError).map(_.getBytes(StandardCharsets.UTF_8))
-    else graft.util.Retry.withRetries(tries, onError, retryable = {
+    graft.util.Retry.withRetries(tries, onError, retryable = {
       case _: java.nio.file.NoSuchFileException => false
       case _: java.nio.file.AccessDeniedException => false
       case _: java.io.IOException => true
@@ -238,7 +215,7 @@ object ShardedLog {
           // contract — a malformed file is corruption, the fail-fast arm
           // (IllegalStateException is non-retryable in the taxonomy)
           throw new IllegalStateException(
-            s"$p: corrupt binary record frame (len=$n, remaining=${bb.remaining()})")
+            s"$p: corrupt record frame (len=$n, remaining=${bb.remaining()})")
         val a = new Array[Byte](n); bb.get(a); out += a
       }
       if (bb.remaining() != 0)
@@ -463,7 +440,7 @@ case class ShardedLogPartition(shard: String, afterSeq: Long, toSeq: Long,
 /** Streams a shard's records in sequence order through the injected
   * [[ShardReader]] — the per-shard ordering guarantee. The file-backed
   * reader's IO goes through the retrying, taxonomy-aware
-  * ShardedLog.readRecLines. */
+  * ShardedLog.readRecPayloads. */
 class ShardedLogReader(partition: ShardedLogPartition) extends PartitionReader[InternalRow] {
   private val rows: Iterator[InternalRow] =
     partition.reader.read(partition.shard, partition.afterSeq, partition.toSeq).map { r =>

@@ -51,51 +51,26 @@ object Transport {
     * see ShardedLog's at_timestamp note).
     *
     * Payload fidelity: the reference is "serialisation format agnostic"
-    * and delivers raw ByteBuffers (reference KinesisSource.scala:68-70).
-    * `value` is the UTF-8 TEXT VIEW (lossy for non-UTF-8 bytes — the
-    * convenient column for the overwhelmingly-text pipelines); the
-    * byte-exact payload is [[payload]], which `bin` carries explicitly
-    * whenever the text view would not round-trip. Construct through
-    * [[Rec.ofBytes]] so the invariant (bin set iff the text view is
-    * lossy) holds. */
-  final case class Rec(shard: String, seq: Long, value: String, tsUs: Long,
-                       bin: Option[Array[Byte]] = None) {
-    /** The exact delivered bytes, whatever the encoding. */
-    def payload: Array[Byte] =
-      bin.getOrElse(value.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    * and delivers raw ByteBuffers (reference KinesisSource.scala:68-70),
+    * so a record IS its payload bytes. [[value]] is the UTF-8 text view
+    * derived from them — lossy for non-UTF-8 bytes, the convenient
+    * column for the overwhelmingly-text pipelines. */
+  final case class Rec(shard: String, seq: Long, payload: Array[Byte], tsUs: Long) {
+    def value: String = new String(payload, StandardCharsets.UTF_8)
 
-    // The synthesized case-class equals/hashCode would compare `bin` by
-    // ARRAY REFERENCE — two Recs with identical binary payloads would be
+    // The synthesized case-class equals/hashCode would compare `payload`
+    // by ARRAY REFERENCE — two Recs with identical payloads would be
     // unequal, a silent trap for any equality/dedup use. Compare payload
-    // CONTENT instead (text-only Recs are unaffected: bin is None on
-    // both sides and the field compare short-circuits to the same
-    // result as the content compare).
+    // CONTENT instead.
     override def equals(other: Any): Boolean = other match {
       case r: Rec =>
-        shard == r.shard && seq == r.seq && value == r.value &&
-          tsUs == r.tsUs && ((bin, r.bin) match {
-            case (None, None) => true
-            case (Some(a), Some(b)) => java.util.Arrays.equals(a, b)
-            case _ => false
-          })
+        shard == r.shard && seq == r.seq && tsUs == r.tsUs &&
+          java.util.Arrays.equals(payload, r.payload)
       case _ => false
     }
     override def hashCode(): Int =
-      java.util.Objects.hash(shard, Long.box(seq), value, Long.box(tsUs),
-        Int.box(bin.fold(0)(java.util.Arrays.hashCode)))
-  }
-
-  object Rec {
-    /** Byte-preserving constructor: keeps the raw payload alongside the
-      * text view only when UTF-8 decode+re-encode would not reproduce
-      * it (so text records pay no duplicate storage). */
-    def ofBytes(shard: String, seq: Long, payload: Array[Byte], tsUs: Long): Rec = {
-      val s = new String(payload, java.nio.charset.StandardCharsets.UTF_8)
-      if (java.util.Arrays.equals(
-          s.getBytes(java.nio.charset.StandardCharsets.UTF_8), payload))
-        Rec(shard, seq, s, tsUs)
-      else Rec(shard, seq, s, tsUs, bin = Some(payload))
-    }
+      java.util.Objects.hash(shard, Long.box(seq), Long.box(tsUs),
+        Int.box(java.util.Arrays.hashCode(payload)))
   }
 
   /** Shard identity with reshard parentage — the reference's
@@ -176,7 +151,7 @@ object TransportRegistry {
 }
 
 /** [[ShardReader]] over the sharded-log file layout
-  * (`<root>/<shard>/<seq>.rec`, [[ShardedLog]]) — the local, durable,
+  * (`<root>/<shard>/<seq>.recb`, [[ShardedLog]]) — the local, durable,
   * default transport. Serializable: carries only the root path string;
   * all IO goes through ShardedLog's retrying, taxonomy-aware readers. */
 final class FileShardReader(rootStr: String) extends ShardReader {
@@ -209,8 +184,7 @@ final class FileShardReader(rootStr: String) extends ShardReader {
       .filter { case (seq, _) => seq > afterSeq && seq <= toSeq }
       .flatMap { case (seq, p) =>
         val mtUs = ShardedLog.mtimeUs(p)
-        ShardedLog.readRecPayloads(p).map(payload =>
-          Transport.Rec.ofBytes(shard, seq, payload, mtUs))
+        ShardedLog.readRecPayloads(p).map(Transport.Rec(shard, seq, _, mtUs))
       }
 }
 
@@ -233,18 +207,10 @@ final class FileShardReader(rootStr: String) extends ShardReader {
   * sequence: the counter is re-seeded from a listing and the publish
   * retried. Nothing is overwritten, and since a writer publishes `n+1`
   * only once `n` exists, a reader that admits up to `n+1` never skips
-  * `n`. One gap is left: two writers that publish one sequence in
-  * different layouts (a text and a binary flush) at the same instant can
-  * both land at it, and a reader that already passed it misses the later
-  * file; the shard's other-layout name is checked before the link, so
-  * only a true race hits it. Payload contract: a flush whose
-  * payloads are all newline-free UTF-8 text lands in the
-  * human-readable line layout (`.rec`); any flush carrying a payload
-  * that would not survive that round-trip (embedded newlines,
-  * non-UTF-8 bytes) is written whole as a length-prefixed binary file
-  * (`.recb`) — byte-exact either way, the
-  * reference's format-agnostic ByteBuffer contract (reference
-  * KinesisSource.scala:68-70). */
+  * `n`. Payload contract: each payload is written as one length-prefixed
+  * frame of its exact bytes, whatever they hold (the writer never looks
+  * at them) — the reference's format-agnostic ByteBuffer contract
+  * (reference KinesisSource.scala:68-70). */
 final class FileRecordWriter(rootStr: String, numShards: Int = 4) extends RecordWriter {
   /** Per shard: the last sequence this instance published or saw (-1
     * until seeded). The slot is also the shard's lock. */
@@ -254,23 +220,15 @@ final class FileRecordWriter(rootStr: String, numShards: Int = 4) extends Record
     val root = Paths.get(rootStr)
     records.groupBy { case (k, _) => "shard-" + math.floorMod(k.hashCode, numShards) }
       .foreach { case (shard, recs) =>
-        val payloads = recs.map(_._2)
-        val decoded = payloads.map(p => new String(p, StandardCharsets.UTF_8))
-        val (ext, write) =
-          if (decoded.lazyZip(payloads).forall { (line, p) =>
-              !line.exists(c => c == '\n' || c == '\r') &&
-                java.util.Arrays.equals(line.getBytes(StandardCharsets.UTF_8), p)
-            }) (".rec", ShardedLog.writeLines(decoded) _)
-          else (".recb", ShardedLog.writeFrames(payloads) _)
         val slot = slots.computeIfAbsent(shard, _ => new FileRecordWriter.Slot)
         // the lock spans staging too, so one instance's files keep
         // mtimes monotone with their sequence (at_timestamp relies on it)
         slot.synchronized {
-          ShardedLog.staged(root, shard, ext, write) { (dir, tmp) =>
+          ShardedLog.staged(root, shard, ShardedLog.writeFrames(recs.map(_._2))) { (dir, tmp) =>
             if (slot.last < 0) slot.last = ShardedLog.maxSeq(dir)
             var published = false
             while (!published) {
-              try { ShardedLog.link(dir, tmp, slot.last + 1, ext); published = true }
+              try { ShardedLog.link(dir, tmp, slot.last + 1); published = true }
               catch {
                 case _: FileAlreadyExistsException => slot.last = ShardedLog.maxSeq(dir)
               }
@@ -317,7 +275,8 @@ final class InMemoryTransport(
     val log = logs(id)
     log.synchronized {
       val cur = log.shards.getOrElse(shard, Vector.empty)
-      log.shards(shard) = cur :+ Transport.Rec(shard, cur.length + 1L, value, clock())
+      log.shards(shard) = cur :+ Transport.Rec(
+        shard, cur.length + 1L, value.getBytes(StandardCharsets.UTF_8), clock())
     }
   }
 
@@ -337,8 +296,7 @@ final class InMemoryTransport(
       records.foreach { case (key, payload) =>
         val shard = "shard-" + math.floorMod(key.hashCode, numShards)
         val cur = log.shards.getOrElse(shard, Vector.empty)
-        log.shards(shard) = cur :+ Transport.Rec.ofBytes(
-          shard, cur.length + 1L, payload, clock())
+        log.shards(shard) = cur :+ Transport.Rec(shard, cur.length + 1L, payload, clock())
       }
     }
     records.map(_ => BatchingSink.PutResult(None))

@@ -170,16 +170,31 @@ class ShardedLogSpec extends SparkSpec {
     val dir = Files.createTempDirectory("rec-as-dir")
     var retries = 0
     intercept[java.io.IOException] {
-      ShardedLog.readRecLines(dir, tries = 3, onError = (_, _) => retries += 1)
+      ShardedLog.readRecPayloads(dir, tries = 3, onError = (_, _) => retries += 1)
     }
     assert(retries === 3, "transient error must consume the whole retry budget")
     // client-class: a missing file can never succeed on retry → fail fast
     var fastRetries = 0
     intercept[java.nio.file.NoSuchFileException] {
-      ShardedLog.readRecLines(dir.resolve("missing.rec"), tries = 3,
+      ShardedLog.readRecPayloads(dir.resolve("missing.recb"), tries = 3,
         onError = (_, _) => fastRetries += 1)
     }
     assert(fastRetries === 0, "client error must not retry")
+  }
+
+  test("a .rec file of the older line layout makes describe and read fail fast") {
+    // skipping it would silently lose its records
+    val root = tmpRoot()
+    ShardedLog.append(root, "a", 1, Seq("a1"))
+    Files.write(root.resolve("a").resolve("00000002.rec"), "a2\n".getBytes("UTF-8"))
+    val reader = new graft.streaming.FileShardReader(root.toString)
+    val described = intercept[IllegalStateException](reader.describeShards())
+    assert(described.getMessage.contains("00000002.rec"))
+    // even a range below the legacy file's sequence fails
+    intercept[IllegalStateException](reader.read("a", 0L, 1L).toList)
+    def chain(t: Throwable): Seq[Throwable] = if (t == null) Nil else t +: chain(t.getCause)
+    val err = intercept[Exception](readAll(root))
+    assert(chain(err).exists(t => Option(t.getMessage).exists(_.contains("00000002.rec"))))
   }
 
   test("resume: a restarted query continues from the committed per-shard offset") {

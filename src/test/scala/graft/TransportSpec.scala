@@ -142,19 +142,22 @@ class TransportSpec extends SparkSpec {
     val ws = Seq.fill(2)(new FileRecordWriter(root.toString, numShards = 1))
     def put(w: Int, tag: String): Unit =
       ws(w).putRecords(Seq(("k", tag.getBytes("UTF-8"))))
-    def recFiles(): Map[String, Seq[String]] =
+    // a binary payload: a 0xFF lead byte (never valid UTF-8) before the tag
+    def putBin(w: Int, tag: String): Unit =
+      ws(w).putRecords(Seq(("k", (-1).toByte +: tag.getBytes("UTF-8"))))
+    def recFiles(): Map[String, Seq[Byte]] =
       if (!Files.isDirectory(shardDir)) Map.empty
       else {
         val s = Files.list(shardDir)
         try s.iterator().asScala.map(_.getFileName.toString)
-          .filter(n => !n.startsWith(".") && n.endsWith(".rec")).toVector
-          .flatMap(n => scala.util.Try(Files.readAllLines(shardDir.resolve(n)).asScala.toSeq)
+          .filter(n => !n.startsWith(".") && n.endsWith(".recb")).toVector
+          .flatMap(n => scala.util.Try(Files.readAllBytes(shardDir.resolve(n)).toSeq)
             .toOption.map(n -> _)).toMap
         finally s.close()
       }
     // a watcher records each file's content the first time it sees it;
     // a published file must never read differently later
-    val firstSeen = new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
+    val firstSeen = new java.util.concurrent.ConcurrentHashMap[String, Seq[Byte]]()
     @volatile var watching = true
     val watcher = new Thread(() => while (watching) recFiles().foreach { case (n, c) =>
       firstSeen.putIfAbsent(n, c) })
@@ -171,14 +174,24 @@ class TransportSpec extends SparkSpec {
     val threads = for (w <- 0 to 1; t <- 1 to 4) yield new Thread(() =>
       (1 to 25).foreach(i => put(w, s"w$w-t$t-$i")))
     threads.foreach(_.start()); threads.foreach(_.join())
+    // 4. on one shard, one instance puts text while the other puts binary
+    val mixed = Seq(
+      new Thread(() => (1 to 25).foreach(i => put(0, s"w0-text-$i"))),
+      new Thread(() => (1 to 25).foreach(i => putBin(1, s"w1-bin-$i"))))
+    mixed.foreach(_.start()); mixed.foreach(_.join())
     watching = false; watcher.join()
     val id = freshId()
     TransportRegistry.register(id, new FileShardReader(root.toString))
     try {
-      val rows = drain(id).select($"seq", $"value").as[(Long, String)].collect().toSeq
+      // a binary record reads back as "bin:" + the tag after its 0xFF byte
+      val rows = drain(id).select($"seq", $"value", $"value_bin")
+        .as[(Long, String, Array[Byte])].collect().toSeq.map { case (seq, v, b) =>
+          (seq, if (b.headOption.contains((-1).toByte)) "bin:" + new String(b.tail, "UTF-8") else v)
+        }
       val expected = (1 to 10).flatMap(i => Seq(s"w0-alt-$i", s"w1-alt-$i")) ++
         Seq("w0-before-direct", "direct", "w0-after-direct") ++
-        (for (w <- 0 to 1; t <- 1 to 4; i <- 1 to 25) yield s"w$w-t$t-$i")
+        (for (w <- 0 to 1; t <- 1 to 4; i <- 1 to 25) yield s"w$w-t$t-$i") ++
+        (1 to 25).flatMap(i => Seq(s"w0-text-$i", s"bin:w1-bin-$i"))
       assert(rows.map(_._2).sorted === expected.sorted, "every record exactly once")
       assert(rows.map(_._1).distinct.length === rows.length, "one record per sequence")
       val seqOf = rows.map(_.swap).toMap
@@ -187,6 +200,7 @@ class TransportSpec extends SparkSpec {
       def ordered(tags: Seq[String]): Boolean = tags.map(seqOf).sliding(2).forall(p => p(0) < p(1))
       (0 to 1).foreach(w => assert(ordered((1 to 10).map(i => s"w$w-alt-$i"))))
       for (w <- 0 to 1; t <- 1 to 4) assert(ordered((1 to 25).map(i => s"w$w-t$t-$i")))
+      assert(ordered((1 to 25).map(i => s"w0-text-$i")) && ordered((1 to 25).map(i => s"bin:w1-bin-$i")))
       val finalFiles = recFiles()
       assert(firstSeen.size > 0)
       firstSeen.asScala.foreach { case (n, c) =>
@@ -196,11 +210,10 @@ class TransportSpec extends SparkSpec {
   }
 
   test("FileRecordWriter carries line-breaking payloads via the binary layout, byte-exact") {
-    // Formerly a ClientException rejection; since the binary-fidelity
-    // change the writer is serialization-format agnostic (the reference
-    // streams raw ByteBuffers, KinesisSource.scala:68-70): a flush that
-    // is not newline-free UTF-8 falls back to the length-prefixed
-    // `.recb` layout and must round-trip the exact bytes.
+    // The writer is serialization-format agnostic (the reference
+    // streams raw ByteBuffers, KinesisSource.scala:68-70): every flush
+    // is length-prefixed `.recb` frames, so payloads that are not
+    // newline-free UTF-8 must round-trip their exact bytes.
     import graft.streaming.{FileRecordWriter, FileShardReader}
     val root = Files.createTempDirectory("fw-bin")
     val w = new FileRecordWriter(root.toString, numShards = 1)
@@ -228,14 +241,13 @@ class TransportSpec extends SparkSpec {
   test("Rec equality compares binary payload content, not array identity") {
     import graft.streaming.Transport.Rec
     val bytes = Array[Byte](-1, 0, 42)
-    val a = Rec.ofBytes("s-0", 1L, bytes, 100L)
-    val b = Rec.ofBytes("s-0", 1L, bytes.clone(), 100L)
-    assert(a.bin.isDefined, "a non-UTF-8 payload must carry bin")
+    val a = Rec("s-0", 1L, bytes, 100L)
+    val b = Rec("s-0", 1L, bytes.clone(), 100L)
     assert(a === b, "identical payload bytes in fresh arrays must be equal")
     assert(a.hashCode === b.hashCode)
-    assert(a !== Rec.ofBytes("s-0", 1L, Array[Byte](-1, 0, 43), 100L))
-    // text-only records: content compare degenerates to field compare
-    assert(Rec("s-0", 2L, "x", 5L) === Rec("s-0", 2L, "x", 5L))
-    assert(Rec("s-0", 2L, "x", 5L) !== a)
+    assert(a !== Rec("s-0", 1L, Array[Byte](-1, 0, 43), 100L))
+    // text records are their UTF-8 bytes: the same content compare
+    assert(Rec("s-0", 2L, "x".getBytes("UTF-8"), 5L) === Rec("s-0", 2L, "x".getBytes("UTF-8"), 5L))
+    assert(Rec("s-0", 2L, "x".getBytes("UTF-8"), 5L) !== a)
   }
 }
