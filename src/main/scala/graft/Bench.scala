@@ -17,7 +17,7 @@ import scala.jdk.CollectionConverters._
   *    BENCH_r05 skipped 10 streaming queries under the old
   *    reps-first order), then remaining budget funds extra reps for
   *    median stability, batch queries first;
-  *  - streaming entries (s*) default to 1 rep: their variance is the
+  *  - streaming entries (s*) run 1 rep: their variance is the
   *    micro-batch harness floor (state-store setup + drain), not plan
   *    quality, so median-of-3 buys nothing there (BENCH_NOTES.md).
   */
@@ -83,8 +83,7 @@ object Bench {
 
   /** Validated env-int parse: a malformed override must degrade to the
     * default with a visible bench_note, not crash the bench after
-    * JVM+Spark startup or silently corrupt stream confs (either costs
-    * the round its artifact). */
+    * JVM+Spark startup (that costs the round its artifact). */
   private def envInt(name: String, default: Int, min: Int = 1): Int =
     sys.env.get(name) match {
       case None => default
@@ -109,20 +108,11 @@ object Bench {
     val budget = envDouble("SPARK_GRAFT_TIME_BUDGET", 240)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // planner confs (AQE off, partitions = cores, ...) and their
-    // measured reasons live in GraftSession, shared with Verify
+    // measured reasons live in GraftSession, shared with Verify; the
+    // s-family's drain shape (its cost is state-store commits ×
+    // micro-batches) is fixed next to `queries.Streaming.drain`, so Bench
+    // times the drains Verify checks
     val spark = GraftSession.local(envInt("SPARK_GRAFT_CPUS", 4))
-    // Streaming-drain floor controls (the bench's s-family cost is
-    // state-store commits × micro-batches — harness, not plan): run the
-    // MINIMUM drain that still exercises every cross-batch merge path
-    // (2 chunks; results are chunk-count-invariant by the parity
-    // contract), fewer state partitions, and a halved rate-limit drain.
-    // Verify and the specs keep the defaults (4 chunks / 8 parts).
-    spark.conf.set("graft.stream.chunks",
-      envInt("SPARK_GRAFT_STREAM_CHUNKS", 2).toString)
-    spark.conf.set("graft.stream.parts",
-      envInt("SPARK_GRAFT_STREAM_PARTS", 4).toString)
-    spark.conf.set("graft.stream.batches",
-      envInt("SPARK_GRAFT_STREAM_BATCHES", 4).toString)
     // Optional comma-separated subset for targeted local timing.
     val only = sys.env.get("SPARK_GRAFT_QUERIES")
       .map(_.split(",").map(_.trim).toSet)
@@ -142,8 +132,8 @@ object Bench {
     val selected = measurementOrder(byName)
     // Warm-up pass at the smallest SF: steady-state timing, not a
     // measurement of JVM/JIT/codegen cold start (which otherwise lands
-    // arbitrarily on whichever queries run first). Disable with
-    // SPARK_GRAFT_WARMUP=0; capped at 7.5% of the time budget (r8
+    // arbitrarily on whichever queries run first). Capped at 7.5% of
+    // the time budget (r8
     // measured the alternative: halving the warmup to 5% saved 12 s of
     // wall and cost ~18 s of cold-JIT inflation in the measured sum,
     // wherever the first ~25 measured entries happened to live — the
@@ -155,7 +145,7 @@ object Bench {
     // single rep of everything is ~155 s at sf0.1, so a 30% warmup
     // starved the last pass-1 entries — BENCH_LOCAL r6) outranks
     // per-query steady-state polish.
-    if (sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0") {
+    locally {
       val warmDir = "/root/testdata/sf0.001"
       // NEVER warm at the measured dir: util.CorpusMemo (BPE merges,
       // centroids, edge/pair sets) keys on (session, corpus dir), and
@@ -263,7 +253,7 @@ object Bench {
         // artifact, not hidden by the catch-all.
         val warmFailures = new java.util.concurrent.atomic.AtomicInteger(0)
         val warmed = new java.util.concurrent.atomic.AtomicInteger(0)
-        val nWorkers = envInt("SPARK_GRAFT_WARM_WORKERS", 8)
+        val nWorkers = 8
         // STAGGERED start (r13): on a cold JVM the first warm entry is
         // dominated by process-global work (classloading, interpreted
         // Catalyst, C2 queue) — launching all 8 workers into that stall
@@ -310,12 +300,16 @@ object Bench {
         // graceEnd re-evaluates: a first success landing mid-wait
         // extends the window (the anchored deadline above)
         def graceEnd: Double = warmDeadline + 10.0
-        while (workers.exists(_.isAlive) && elapsed < graceEnd)
-          workers.foreach(_.join(250))
-        it.synchronized { warmClosed = true }
-        // a worker still parked on firstDone never started an entry and
-        // now exits on its own: only started ones need cancelling
+        // a worker still parked on firstDone never started an entry: only
+        // started ones can be in flight. Past the deadline with none in
+        // flight no entry can start or succeed, so the loop ends there
+        // (parked late workers exit once warmClosed is set) instead of
+        // idling until graceEnd.
         def inFlight: Boolean = workers.exists(t => t.isAlive && startedWorkers.contains(t))
+        while (workers.exists(_.isAlive) && elapsed < graceEnd &&
+               (elapsed < warmDeadline || inFlight))
+          workers.find(_.isAlive).foreach(_.join(250))
+        it.synchronized { warmClosed = true }
         if (inFlight) {
           println(s"""{"bench_note":"warmup cancelled at ${"%.0f".format(elapsed)}s (grace exceeded)"}""")
           // cancelAllJobs only kills currently-ACTIVE jobs: a warm entry
@@ -375,7 +369,7 @@ object Bench {
     // compiles before this point happened in the (untimed) warmup;
     // compiles after it happen inside measured reps
     val cg0 = janinoCount
-    // Median-of-N per query (default 3): a single-shot in-suite number
+    // Median-of-3 per query: a single-shot in-suite number
     // can swing 5x under co-tenant load (r3's d20 artifact: 20.9 s
     // recorded vs 3.7 s isolated), so the recorded figure is the median
     // and the min/max band is published alongside as the noise bound.
@@ -383,8 +377,8 @@ object Bench {
     // recorded — host-steal noise is strictly additive, so of two shots
     // the lower one is closer to true plan cost (a 2-rep entry would
     // otherwise record its WORSE shot).
-    val repsBatch = envInt("SPARK_GRAFT_REPS", 3)
-    val repsStream = envInt("SPARK_GRAFT_STREAM_REPS", 1)
+    val repsBatch = 3
+    val repsStream = 1
     // Entries whose FIRST run memoizes a deterministic driver-side
     // artifact for the session (d45: the BPE merge sequence, shared with
     // d47; d46: the Lloyd centroid rounds, shared with d68 — train once,

@@ -18,9 +18,6 @@ object ProfileEntry {
     val name = args(1)
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    spark.conf.set("graft.stream.chunks", "2")
-    spark.conf.set("graft.stream.parts", "4")
-    spark.conf.set("graft.stream.batches", "4")
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Long, String, Int)]()

@@ -58,14 +58,10 @@ object Verify {
     // kills Verify on a wall budget, and a ~3x shorter loop turns a
     // slow-phase kill into a non-event (with oracle_sql.json written
     // first, a kill already only costs the unfinished tail).
-    // SPARK_GRAFT_VERIFY_THREADS sets the number of workers (one runs
-    // the entries in order); persisted intermediates are left to Spark's
-    // LRU storage eviction plus the periodic clear below (a per-entry
-    // clear from one worker would yank a concurrent entry's cache mid-job).
-    // validated parse: a malformed override must not crash the dump
-    // after JVM+Spark startup (it would zero the round's correctness)
-    val nThreads = sys.env.get("SPARK_GRAFT_VERIFY_THREADS")
-      .flatMap(_.trim.toIntOption).getOrElse(4).max(1)
+    // Four workers; persisted intermediates are left to Spark's LRU
+    // storage eviction plus the periodic clear below (a per-entry clear
+    // from one worker would yank a concurrent entry's cache mid-job).
+    val nThreads = 4
     val done = new java.util.concurrent.atomic.AtomicInteger(0)
     val it = selected.iterator
     def nextEntry(): Option[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =

@@ -37,17 +37,32 @@ object Streaming {
   private def ckptDir(): String =
     graft.util.TempDirs.freshUnder("/dev/shm", "graft-ckpt")
 
+  /** The one drain shape every caller runs (Bench, Verify, PlanDump, the
+    * specs). An s-entry costs its micro-batches times the state-store
+    * commits in each, and its table does not depend on how its input was
+    * split (the stream/batch parity its oracle pins). Against 4 feeds /
+    * 8 partitions / 8 batches this shape took the s-family from 45.6 to
+    * 31.7 s at sf0.1 on 32 cores (BENCH_NOTES "Round 7"):
+    *  - `DrainChunks` feeds per chunked drain, the fewest that still run
+    *    every cross-batch merge path;
+    *  - `DrainParts` state partitions (the drain session's
+    *    `shuffle.partitions`): drain cost is per-partition state-store
+    *    checkpointing, not data volume; a deployment sizes this to key
+    *    cardinality and executors;
+    *  - `DrainBatches` rate-limited micro-batches for s3. */
+  private val DrainChunks = 2
+  private[graft] val DrainParts = 4
+  private val DrainBatches = 4
+
   /** Runs one bounded drain in its own session, a clone of the caller's
     * (the isolation Spark's StreamExecution itself takes at query start):
     * only the clone gets the drain confs, so concurrent drains and batch
     * entries never see each other's `shuffle.partitions`. The drain confs
-    * are few state partitions, `graft.stream.parts` (drain cost is
-    * per-partition state-store checkpointing, not data volume — a real
-    * deployment sizes this to key cardinality / executor count), and the
-    * state-store PROVIDER selected by `graft.stream.stateStore`: the
-    * default HDFS-backed in-memory store, or `rocksdb` for Spark's
-    * RocksDB provider — the store a 100 TB deployment runs, where
-    * per-key state must spill beyond executor heap; StreamingSpec pins
+    * are `DrainParts` state partitions and the state-store PROVIDER
+    * selected by the caller's `graft.stream.stateStore`: the default
+    * HDFS-backed in-memory store, or `rocksdb` for Spark's RocksDB
+    * provider — the store a 100 TB deployment runs, where per-key state
+    * must spill beyond executor heap; StreamingSpec pins
     * provider-identical results on the stateful operators. The streaming
     * plan is re-homed in the clone, and the memory-sink table back in the
     * caller's session, by their analyzed plans. Both the clone and the
@@ -56,8 +71,7 @@ object Streaming {
   private def drain(spark: SparkSession, df: DataFrame, outputMode: String)(
       feed: StreamingQuery => Unit): DataFrame = {
     val session = GraftSqlBridge.cloneSession(spark)
-    session.conf.set(SQLConf.SHUFFLE_PARTITIONS.key,
-      spark.conf.get("graft.stream.parts", "8"))
+    session.conf.set(SQLConf.SHUFFLE_PARTITIONS.key, DrainParts.toString)
     if (spark.conf.get("graft.stream.stateStore", "hdfs") == "rocksdb")
       session.conf.set(SQLConf.STATE_STORE_PROVIDER_CLASS.key,
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
@@ -96,20 +110,10 @@ object Streaming {
       chunks.foreach { c => in.addData(c); q.processAllAvailable() }
     }
 
-  /** Bench-tunable micro-batch chunking: split `rows` into
-    * `graft.stream.chunks` successive feeds (default 4, floor 2 so the
-    * cross-batch merge path executes whenever the feed has >= 2 rows —
-    * a 0/1-row feed cannot split and runs a single batch). Every
-    * entry's final table
-    * is chunk-count-invariant — that is exactly the streaming/batch
-    * parity the oracles and StreamingSpec pin — so the knob trades only
-    * drain cost (state-store commits × batches, the harness floor)
-    * against how many merge steps run; Bench sets 2, Verify and the
-    * specs keep the default 4. */
-  private def mbChunks[A](s: SparkSession, rows: Seq[A]): Seq[Seq[A]] = {
-    val n = s.conf.get("graft.stream.chunks", "4").toInt.max(2)
-    rows.grouped(math.max(1, rows.size / n)).toSeq
-  }
+  /** Splits `rows` into `DrainChunks` successive feeds (a 0/1-row feed
+    * cannot split and runs a single batch). */
+  private def mbChunks[A](rows: Seq[A]): Seq[Seq[A]] =
+    rows.grouped(math.max(1, rows.size / DrainChunks)).toSeq
 
   /** Materialize events as a 4-shard append-only log (shard = user_id
     * mod 4, `chunk` ids per file), harness setup for s1/s3. */
@@ -182,14 +186,12 @@ object Streaming {
          |  CAST(SUM(event_id) AS BIGINT) AS id_sum
          |FROM ev GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
       import s.implicits._
-      // chunk sized so the drain is always a fixed number of rate-limited
-      // batches (default ~8; Bench halves it — same nothing-lost/doubled
-      // contract, less harness floor), independent of SF (a fixed chunk
-      // would mean O(rows) micro-batches at larger scale factors —
-      // harness time, not operator work)
-      val batches = s.conf.get("graft.stream.batches", "8").toInt.max(2)
+      // chunk sized so the drain is always about DrainBatches
+      // rate-limited batches, independent of SF (a fixed chunk would
+      // mean O(rows) micro-batches at larger scale factors — harness
+      // time, not operator work)
       val total = Tables.events(s, dir).count()
-      val chunk = math.max(500L, total / 4 / batches + 1).toInt
+      val chunk = math.max(500L, total / 4 / DrainBatches + 1).toInt
       val root = materializeLog(s, dir, chunk)
       try {
         val stream = s.readStream.format(ShardedLog.Format)
@@ -280,7 +282,7 @@ object Streaming {
       val agg = StreamOps.tumblingCounts(
         in.toDF().toDF("ts", "value"),
         tsCol = "ts", width = "1 day", horizon = "1 hour")
-      drainChunksToTable(s, agg, "complete", in, mbChunks(s, rows))
+      drainChunksToTable(s, agg, "complete", in, mbChunks(rows))
         // daily windows start at midnight, so the date IS the window
         .select($"wstart".cast("date").as("wday"), $"n", $"total_value")
         .orderBy($"wday")
@@ -316,8 +318,7 @@ object Streaming {
         .groupBy($"lang")
         .agg(count(lit(1)).as("n_docs"),
           sum($"is_long").as("n_long"), sum($"is_clean").as("n_clean"))
-      drainChunksToTable(s, gated, "complete", in,
-        mbChunks(s, rows)).orderBy($"lang")
+      drainChunksToTable(s, gated, "complete", in, mbChunks(rows)).orderBy($"lang")
     },
 
     // ---- s9: streaming content dedup — the ingest-side twin of d1:
@@ -387,8 +388,7 @@ object Streaming {
         // pairs on the stream, count them per doc after the drain
         .groupBy($"doc_id", $"eval_id")
         .agg(count(lit(1)).as("n_hits"))
-      drainChunksToTable(s, pairs, "complete", in,
-        mbChunks(s, rows))
+      drainChunksToTable(s, pairs, "complete", in, mbChunks(rows))
         .groupBy($"doc_id")
         .agg(count(lit(1)).as("n_eval_docs"))
         .orderBy($"doc_id")
@@ -460,8 +460,7 @@ object Streaming {
         .join(ref, Seq("band_idx", "band_hash"))
         .groupBy($"doc_id", $"ref_id")
         .agg(count(lit(1)).as("n_bands"))
-      drainChunksToTable(s, pairs, "complete", in,
-        mbChunks(s, docRows))
+      drainChunksToTable(s, pairs, "complete", in, mbChunks(docRows))
         .groupBy($"doc_id")
         .agg(count(lit(1)).as("n_ref_candidates"))
         .orderBy($"doc_id")
@@ -470,7 +469,7 @@ object Streaming {
     // ---- s12: per-source admission QUOTA on the ingest stream — the
     // stateful front-door cap (StreamOps.quotaGate): every source
     // admits its first 15 documents and rejects the rest, the running
-    // count carried in GroupState across the 4 micro-batches. Batches
+    // count carried in GroupState across the micro-batches. Batches
     // are fed in doc_id order, so the admitted set is deterministically
     // "first 15 per source by doc_id" and the DuckDB row_number oracle
     // hash-checks the drain — including the order-insensitive id
@@ -490,10 +489,9 @@ object Streaming {
         .as[StreamOps.QuotaDoc].collect().toSeq.sortBy(_.doc_id)
       val in = MemoryStream[StreamOps.QuotaDoc](s)
       val gated = StreamOps.quotaGate(in.toDS(), cap = 15L)
-      // 4 real micro-batches in doc_id order: the per-source running
+      // real micro-batches in doc_id order: the per-source running
       // count must carry across the batch boundaries in GroupState
-      drainChunksToTable(s, gated.toDF(), "append", in,
-        mbChunks(s, docRows))
+      drainChunksToTable(s, gated.toDF(), "append", in, mbChunks(docRows))
         .groupBy($"source")
         .agg(count(lit(1)).as("n_seen"),
           sum($"admitted".cast("long")).as("n_admitted"),
@@ -525,8 +523,7 @@ object Streaming {
       val wCum = Window.partitionBy($"day").orderBy($"bin")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val wAll = Window.partitionBy($"day")
-      drainChunksToTable(s, binned, "complete", in,
-        mbChunks(s, rows))
+      drainChunksToTable(s, binned, "complete", in, mbChunks(rows))
         .withColumn("cum", sum($"c").over(wCum))
         .withColumn("n", sum($"c").over(wAll))
         .groupBy($"day")
@@ -559,10 +556,9 @@ object Streaming {
         .collect().sortBy(e => (e.tsUs, e.event_id)).toSeq
       val in = MemoryStream[StatEvent](s)
       val flagged = StreamOps.runningOutlierGate(in.toDS(), minPrior = 30L)
-      // 4 real time-split micro-batches: each user's (n, Σv, Σv²) must
+      // real time-split micro-batches: each user's (n, Σv, Σv²) must
       // fold across the batch boundaries in GroupState
-      drainChunksToTable(s, flagged.toDF(), "append", in,
-        mbChunks(s, rows))
+      drainChunksToTable(s, flagged.toDF(), "append", in, mbChunks(rows))
         .select($"user_id", $"event_id", $"value", $"n_prior")
         .orderBy($"user_id", $"event_id")
     },
@@ -587,8 +583,7 @@ object Streaming {
           max($"value").as("high"), min($"value").as("low"),
           max_by($"value", struct($"ts", $"event_id")).as("close"),
           count(lit(1)).as("n"))
-      drainChunksToTable(s, bars, "complete", in,
-        mbChunks(s, rows))
+      drainChunksToTable(s, bars, "complete", in, mbChunks(rows))
         .orderBy($"user_id", $"day")
     },
 
@@ -613,8 +608,7 @@ object Streaming {
         .agg(count(lit(1)).as("n"),
           sum(($"value".cast("decimal(18,2)") * 100).cast("long")).as("s"))
       val w = Window.partitionBy($"user_id").orderBy($"week")
-      drainChunksToTable(s, wk, "complete", in,
-        mbChunks(s, rows))
+      drainChunksToTable(s, wk, "complete", in, mbChunks(rows))
         .withColumn("pn", lag($"n", 1).over(w))
         .withColumn("ps", lag($"s", 1).over(w))
         .select($"user_id", $"week", $"n".as("n_events"), $"s".as("sum_cents"),
@@ -728,7 +722,7 @@ object Streaming {
     // flagged. Raw corpus text (no synthetic contact suffix here): the
     // blocklisted entity term is the live signal, the email/phone/IP
     // patterns prove the no-match path costs nothing and drops nothing.
-    // Delivered across 4 real micro-batches.
+    // Delivered across real micro-batches.
     GraftQuery.sql("s18_stream_pii_gate",
       """WITH r AS (SELECT doc_id, lang,
         |    len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
@@ -758,8 +752,7 @@ object Streaming {
           sum($"n_pii").as("n_hits"),
           sum(($"n_pii" > 0).cast("long")).as("n_flagged"),
           sum(when($"n_pii" > 0, $"doc_id").otherwise(0L)).as("flagged_id_sum"))
-      drainChunksToTable(s, gated, "complete", in,
-        mbChunks(s, piiRows)).orderBy($"lang")
+      drainChunksToTable(s, gated, "complete", in, mbChunks(piiRows)).orderBy($"lang")
     },
 
     // ---- s19: per-source TOKEN budget on the doc stream — s12's quota
@@ -767,7 +760,7 @@ object Streaming {
     // counts). Truncation semantics: the source closes once its running
     // token total crosses the budget; admitted iff the prefix sum incl.
     // this doc <= 800. State = one long per source in GroupState,
-    // carried across 4 real micro-batch boundaries; the oracle is the
+    // carried across real micro-batch boundaries; the oracle is the
     // same decision as one batch window over the prefix sum.
     GraftQuery.sql("s19_stream_token_quota",
       """WITH r AS (SELECT doc_id, source,
@@ -792,8 +785,7 @@ object Streaming {
         .as[StreamOps.TokDoc].collect().toSeq.sortBy(_.doc_id)
       val in = MemoryStream[StreamOps.TokDoc](s)
       val gated = StreamOps.tokenQuotaGate(in.toDS(), budget = 800L)
-      drainChunksToTable(s, gated.toDF(), "append", in,
-        mbChunks(s, docRows))
+      drainChunksToTable(s, gated.toDF(), "append", in, mbChunks(docRows))
         .groupBy($"source")
         .agg(count(lit(1)).as("n_seen"),
           sum($"admitted".cast("long")).as("n_admitted"),
@@ -825,10 +817,9 @@ object Streaming {
         .collect().sortBy(e => (e.tsUs, e.event_id)).toSeq
       val in = MemoryStream[StatEvent](s)
       val smoothed = StreamOps.ewmaGate(in.toDS())
-      // 4 time-split micro-batches: each user's 7-tap ring must fold
+      // time-split micro-batches: each user's 7-tap ring must fold
       // across the batch boundaries in GroupState
-      drainChunksToTable(s, smoothed.toDF(), "append", in,
-        mbChunks(s, rows))
+      drainChunksToTable(s, smoothed.toDF(), "append", in, mbChunks(rows))
         .select($"user_id", $"event_id", $"ewma_x256")
         .orderBy($"user_id", $"event_id")
     },
@@ -864,8 +855,7 @@ object Streaming {
         .map(d => d.copy(toks = d.toks.filter(_.nonEmpty)))
       val in = MemoryStream[HHDoc](s)
       val sketched = StreamOps.heavyHitterGate(in.toDS(), capacity = 31)
-      val snaps = drainChunksToTable(s, sketched.toDF(), "append", in,
-        mbChunks(s, docRows))
+      val snaps = drainChunksToTable(s, sketched.toDF(), "append", in, mbChunks(docRows))
       // last snapshot per source = the full-stream sketch
       val wLast = org.apache.spark.sql.expressions.Window
         .partitionBy($"source").orderBy($"n".desc)
@@ -928,8 +918,7 @@ object Streaming {
           Vectors.cosineWithNorms($"emb", $"r_emb", $"nrm", $"r_nrm") >= 0.4)
         .select($"vec_id", $"r_id",
           Vectors.cosineWithNorms($"emb", $"r_emb", $"nrm", $"r_nrm").as("cos"))
-      drainChunksToTable(s, flagged, "append", in,
-        mbChunks(s, streamRows))
+      drainChunksToTable(s, flagged, "append", in, mbChunks(streamRows))
         .groupBy($"vec_id")
         .agg(count(lit(1)).as("n_ref_matches"), round(max($"cos"), 6).as("max_cos"))
         .orderBy($"vec_id")
@@ -1017,7 +1006,7 @@ object Streaming {
             g => call_function("bloom_contains_long", g, lit(bfBytes))))
             .cast("long").as("n_hits"))
         .filter($"n_hits" > 0)
-      drainChunksToTable(s, gate, "append", in, mbChunks(s, rows))
+      drainChunksToTable(s, gate, "append", in, mbChunks(rows))
         .orderBy($"doc_id")
     },
 
@@ -1042,7 +1031,7 @@ object Streaming {
         .collect().sortBy(e => (e.tsUs, e.event_id)).toSeq
       val in = MemoryStream[TypedEvent](s)
       val edges = StreamOps.transitionGate(in.toDS())
-      drainChunksToTable(s, edges.toDF(), "append", in, mbChunks(s, rows))
+      drainChunksToTable(s, edges.toDF(), "append", in, mbChunks(rows))
         .groupBy($"prev_type", $"next_type")
         .agg(count(lit(1)).as("n"))
         .withColumn("p_bps",
@@ -1070,7 +1059,7 @@ object Streaming {
         s, in.toDF().toDF("doc_id", "text"))
       val vad = graft.operators.Multimodal
         .detectVoice(media, frame = 160, meanSqThresh = 900L)
-      drainChunksToTable(s, vad.toDF(), "append", in, mbChunks(s, rows))
+      drainChunksToTable(s, vad.toDF(), "append", in, mbChunks(rows))
         .orderBy($"doc_id")
     },
 
@@ -1216,7 +1205,7 @@ object Streaming {
       // counts run, so batch and stream cannot drift
       val positions = Docs.lmPositions(in.toDF().toDF("doc_id", "text"))
       val scored = Docs.lmScore(positions, c1, big, tri, st)
-      drainChunksToTable(s, scored, "complete", in, mbChunks(s, rows))
+      drainChunksToTable(s, scored, "complete", in, mbChunks(rows))
         .orderBy($"doc_id")
     },
 
@@ -1245,7 +1234,7 @@ object Streaming {
       // ways (type alphabet, day bounds, the left join) — self-joining
       // the memory-sink view trips conflicting-reference resolution,
       // and the grid is alphabet × span tiny anyway
-      val g = drainChunksToTable(s, counts, "complete", in, mbChunks(s, rows))
+      val g = drainChunksToTable(s, counts, "complete", in, mbChunks(rows))
         .select($"event_type", $"w.start".cast("date").as("wday"), $"n")
         .localCheckpoint(true)
       Events.burstFromDaily(g).orderBy($"event_type", $"wday")

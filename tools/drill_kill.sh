@@ -7,7 +7,8 @@
 #            a partial-but-real dump — every COMPLETED entry (_SUCCESS
 #            present) passes the driver-faithful oracle compare.
 #   drill 2: a 60 s bench budget still samples EVERY SURVEY family
-#            (q/e/d/s) and the final stdout line parses as JSON.
+#            (q/e/d/s) and the final stdout line parses as JSON; its
+#            PASS line quotes the bench's warm-up notes.
 #
 # Usage: tools/drill_kill.sh        (builds assumed: sbt compile done)
 # Exit 0 = both drills green; nonzero with a DRILL FAIL line otherwise.
@@ -84,10 +85,19 @@ if not isinstance(qmap, dict):  # split form: map is its own line above
 if not isinstance(qmap, dict) or not qmap:
     sys.exit("DRILL FAIL: drill2: no per-query map in bench output")
 fams = {k[0] for k in qmap}
+notes = []
+for l in lines:
+    try:
+        note = json.loads(l).get("bench_note", "")
+    except Exception:
+        continue
+    if isinstance(note, str) and note.startswith("warmup"):
+        notes.append(note)
 missing = {"q", "e", "d", "s"} - fams
 if missing:
     sys.exit(f"DRILL FAIL: drill2: families never sampled: {sorted(missing)}")
 print(f"drill2 PASS: 60 s budget measured {len(qmap)} entries across "
       f"families {sorted(fams)}; final line parses "
-      f"(complete={summary.get('complete')}, skipped_n={summary.get('skipped_n')})")
+      f"(complete={summary.get('complete')}, skipped_n={summary.get('skipped_n')}); "
+      f"warm-up: {'; '.join(notes) or 'no note'}")
 EOF
