@@ -301,13 +301,16 @@ object Bench {
         // extends the window (the anchored deadline above)
         def graceEnd: Double = warmDeadline + 10.0
         // a worker still parked on firstDone never started an entry: only
-        // started ones can be in flight. Past the deadline with none in
-        // flight no entry can start or succeed, so the loop ends there
-        // (parked late workers exit once warmClosed is set) instead of
-        // idling until graceEnd.
+        // started ones can be in flight. With none in flight, the loop
+        // ends once the deadline has passed (no entry can start or
+        // succeed) or the queue is empty (none is left to start, e.g. an
+        // s-only run, whose queue is empty from the start); parked late
+        // workers exit once warmClosed is set. Otherwise it would idle
+        // until graceEnd or warmDeadline.
         def inFlight: Boolean = workers.exists(t => t.isAlive && startedWorkers.contains(t))
+        def queueEmpty: Boolean = it.synchronized(!it.hasNext)
         while (workers.exists(_.isAlive) && elapsed < graceEnd &&
-               (elapsed < warmDeadline || inFlight))
+               (inFlight || (elapsed < warmDeadline && !queueEmpty)))
           workers.find(_.isAlive).foreach(_.join(250))
         it.synchronized { warmClosed = true }
         if (inFlight) {

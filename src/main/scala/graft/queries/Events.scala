@@ -21,8 +21,9 @@ object Events {
 
   private def ev(s: SparkSession, dir: String): DataFrame = Tables.events(s, dir)
 
-  /** Shared oracle prelude: events with µs-normalized ts. */
-  private val evCte =
+  /** Shared oracle prelude: events with µs-normalized ts (Streaming's
+    * event entries use it too). */
+  private[queries] val evCte =
     "WITH ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value FROM events)"
 
   /** Shared strictly-after funnel stage frames (view -> click ->

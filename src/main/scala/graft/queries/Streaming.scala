@@ -2,12 +2,13 @@ package graft.queries
 
 import graft.Tables
 import graft.streaming.{BatchingSink, FileRecordWriter, ShardedLog, StreamOps, ToRecord}
+import java.nio.file.{Path, Paths}
 import java.util.UUID
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{DataStreamReader, StreamingQuery}
 
 /** Streaming transport operators (SURVEY.md §2.1) run end-to-end as real
   * Structured Streaming queries against driver testdata, then surfaced
@@ -21,10 +22,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * loses and duplicates nothing.
   */
 object Streaming {
-
-  /** Shared oracle prelude (events.ts normalized ns→µs, as in Events). */
-  private val evCte =
-    "WITH ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value FROM events)"
+  import Events.evCte
 
   /** Checkpoint scratch for the bounded drains. State-store commits are
     * many tiny fsynced files; on a disk-backed java.io.tmpdir they pay
@@ -43,14 +41,14 @@ object Streaming {
     * split (the stream/batch parity its oracle pins). Against 4 feeds /
     * 8 partitions / 8 batches this shape took the s-family from 45.6 to
     * 31.7 s at sf0.1 on 32 cores (BENCH_NOTES "Round 7"):
-    *  - `DrainChunks` feeds per chunked drain, the fewest that still run
-    *    every cross-batch merge path;
+    *  - `DrainChunks` feeds per `drainFed` drain, the fewest that still
+    *    run every cross-batch merge path;
     *  - `DrainParts` state partitions (the drain session's
     *    `shuffle.partitions`): drain cost is per-partition state-store
     *    checkpointing, not data volume; a deployment sizes this to key
     *    cardinality and executors;
     *  - `DrainBatches` rate-limited micro-batches for s3. */
-  private val DrainChunks = 2
+  private[graft] val DrainChunks = 2
   private[graft] val DrainParts = 4
   private val DrainBatches = 4
 
@@ -96,44 +94,73 @@ object Streaming {
                            outputMode: String): DataFrame =
     drain(spark, df, outputMode)(_.processAllAvailable())
 
-  /** Like drainToTable, but the query STARTS BEFORE any data exists and
-    * each chunk is fed between processAllAvailable calls — so every
-    * chunk is a real, separate micro-batch and cross-batch state
+  /** Runs `pipeline` as a bounded drain over `input`, fed as real
+    * micro-batches: the query STARTS BEFORE any data exists and each feed
+    * is added between processAllAvailable calls, so cross-batch state
     * continuity (GroupState folds, complete-mode re-aggregation,
-    * within-watermark dedup across a redelivery batch) actually
-    * executes. addData-all-then-start would collapse the feed into ONE
-    * micro-batch and silently skip the merge path (ADVICE r4). */
-  private def drainChunksToTable[A](spark: SparkSession, df: DataFrame,
-                                    outputMode: String, in: MemoryStream[A],
-                                    chunks: Seq[Seq[A]]): DataFrame =
-    drain(spark, df, outputMode) { q =>
-      chunks.foreach { c => in.addData(c); q.processAllAvailable() }
+    * within-watermark dedup across a redelivery batch) actually executes.
+    * Adding every feed before the first processAllAvailable would collapse
+    * them into ONE micro-batch and silently skip the merge path
+    * (FeedBatchSpec counts the batches). The stream's schema is `input`'s
+    * and its row order is the feed order, split into `DrainChunks`
+    * successive feeds (a 0/1-row input cannot split and runs a single
+    * batch); `redeliver` feeds the whole input twice instead, the
+    * at-least-once redelivery as its own batch. The input is collected to
+    * the driver here, the one place a distributed feed would go; an entry
+    * whose fold depends on arrival order names its total order in
+    * `orderBy`, sorted after the collect (a Spark `orderBy` adds a sampling
+    * job and a shuffle: +11-29% on those entries, BENCH_NOTES "r19"). */
+  private def drainFed(input: DataFrame, outputMode: String, orderBy: Seq[String] = Nil,
+                       redeliver: Boolean = false)(
+      pipeline: DataFrame => DataFrame): DataFrame = {
+    val keys = orderBy.map(input.schema.fieldIndex)
+    val byKeys: Ordering[Row] = (a, b) => keys.iterator
+      .map(i => a.getAs[Comparable[Any]](i).compareTo(b.get(i))).find(_ != 0).getOrElse(0)
+    val rows = input.collect().toSeq.sorted(byKeys)
+    val in = MemoryStream[Row](input.sparkSession)(Encoders.row(input.schema))
+    val feeds =
+      if (redeliver) Seq(rows, rows)
+      else rows.grouped(math.max(1, (rows.size + DrainChunks - 1) / DrainChunks)).toSeq
+    drain(input.sparkSession, pipeline(in.toDF()), outputMode) { q =>
+      feeds.foreach { f => in.addData(f); q.processAllAvailable() }
+    }
+  }
+
+  /** Runs `pipeline` as a bounded drain over a sharded log that `write`
+    * lays out in a fresh tmpfs dir, read through the DSv2 source from the
+    * trim horizon. Once the drain returns the memory sink holds the
+    * result, so the log is deleted then, not at JVM exit. */
+  private def drainLog(s: SparkSession, outputMode: String)(write: Path => Unit)(
+      pipeline: DataStreamReader => DataFrame): DataFrame = {
+    val root = Paths.get(graft.util.TempDirs.freshUnder("/dev/shm", "graft-log"))
+    try {
+      write(root)
+      drainToTable(s, pipeline(s.readStream.format(ShardedLog.Format)
+        .option("path", root.toString)
+        .option("startingPosition", "trim_horizon")), outputMode)
+    } finally graft.util.TempDirs.delete(root.toString)
+  }
+
+  /** Lays out `(shard, id, payload)` rows as per-shard files of `chunk`
+    * records in id order, numbered from `firstSeq`. */
+  private def writeLog(root: Path, rows: DataFrame, chunk: Int, firstSeq: Long = 1L): Unit =
+    rows.collect().groupBy(_.getLong(0)).foreach { case (shard, rs) =>
+      rs.sortBy(_.getLong(1)).grouped(chunk).zipWithIndex.foreach { case (c, i) =>
+        ShardedLog.append(root, s"s$shard", firstSeq + i, c.map(_.getString(2)).toSeq)
+      }
     }
 
-  /** Splits `rows` into `DrainChunks` successive feeds (a 0/1-row feed
-    * cannot split and runs a single batch). */
-  private def mbChunks[A](rows: Seq[A]): Seq[Seq[A]] =
-    rows.grouped(math.max(1, rows.size / DrainChunks)).toSeq
+  /** events as log rows: shard = user_id mod 4, id = event_id. */
+  private def eventLog(s: SparkSession, dir: String,
+                       payload: Column = col("event_id").cast("string")): DataFrame =
+    Tables.events(s, dir).select(pmod(col("user_id"), lit(4)), col("event_id"), payload)
 
-  /** Materialize events as a 4-shard append-only log (shard = user_id
-    * mod 4, `chunk` ids per file), harness setup for s1/s3. */
-  private def materializeLog(s: SparkSession, dir: String,
-                             chunk: Int): java.nio.file.Path = {
-    import s.implicits._
-    val root = java.nio.file.Paths.get(
-      graft.util.TempDirs.freshUnder("/dev/shm", "graft-shardedlog"))
+  /** events as `StreamOps.StatEvent` rows, fed in (tsUs, event_id) order:
+    * the in-order ingest s14 and s20 fold per user. */
+  private def statEvents(s: SparkSession, dir: String): DataFrame =
     Tables.events(s, dir)
-      .select($"event_id", pmod($"user_id", lit(4)).as("shard"))
-      .collect()
-      .groupBy(_.getLong(1))
-      .foreach { case (shard, rows) =>
-        rows.map(_.getLong(0)).sorted.toSeq.grouped(chunk).zipWithIndex.foreach {
-          case (ids, i) =>
-            ShardedLog.append(root, s"s$shard", i + 1L, ids.map(_.toString))
-        }
-      }
-    root
-  }
+      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("tsUs"),
+        (col("value").cast("decimal(18,2)") * 100).cast("long").as("vi"), col("value"))
 
   /** The batch twin's oracle string, shared VERBATIM: stream/batch
     * parity means ONE oracle — a fix to the batch entry's oracle must
@@ -158,20 +185,13 @@ object Streaming {
          |  MIN(event_id) AS min_id, MAX(event_id) AS max_id
          |FROM ev GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val root = materializeLog(s, dir, chunk = 2000)
-      try {
-        val stream = s.readStream.format(ShardedLog.Format)
-          .option("path", root.toString)
-          .option("startingPosition", "trim_horizon")
-          .load()
+      drainLog(s, "complete")(writeLog(_, eventLog(s, dir), chunk = 2000)) {
+        _.load()
           .select($"shard", $"value".cast("long").as("event_id"))
           .groupBy($"shard")
           .agg(count(lit(1)).as("n"),
             min($"event_id").as("min_id"), max($"event_id").as("max_id"))
-        drainToTable(s, stream, "complete").orderBy($"shard")
-        // the drain is complete and the memory sink holds the result —
-        // free the tmpfs log now, not at JVM exit
-      } finally graft.util.TempDirs.delete(root.toString)
+      }.orderBy($"shard")
     },
 
     // ---- s3: backpressured drain — same log, but admission control caps
@@ -192,18 +212,12 @@ object Streaming {
       // time, not operator work)
       val total = Tables.events(s, dir).count()
       val chunk = math.max(500L, total / 4 / DrainBatches + 1).toInt
-      val root = materializeLog(s, dir, chunk)
-      try {
-        val stream = s.readStream.format(ShardedLog.Format)
-          .option("path", root.toString)
-          .option("startingPosition", "trim_horizon")
-          .option("maxFilesPerTrigger", "1")
-          .load()
+      drainLog(s, "complete")(writeLog(_, eventLog(s, dir), chunk)) {
+        _.option("maxFilesPerTrigger", "1").load()
           .select($"shard", $"value".cast("long").as("event_id"))
           .groupBy($"shard")
           .agg(count(lit(1)).as("n"), sum($"event_id").as("id_sum"))
-        drainToTable(s, stream, "complete").orderBy($"shard")
-      } finally graft.util.TempDirs.delete(root.toString)
+      }.orderBy($"shard")
     },
 
     // ---- s2: the batching sink end-to-end, distributed: every partition
@@ -246,19 +260,13 @@ object Streaming {
          |SELECT event_type, COUNT(*) AS n
          |FROM ev GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
       import s.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      val rows = Tables.events(s, dir)
-        .select($"event_id", $"event_type", $"ts")
-        .as[(Long, String, java.sql.Timestamp)]
-        .collect().toSeq
-      val in = MemoryStream[(Long, String, java.sql.Timestamp)](s)
-      val deduped = StreamOps.dedupWithinWatermark(
-        in.toDF().toDF("event_id", "event_type", "ts"),
-        tsCol = "ts", horizon = "3650 days", keys = Seq("event_id"))
       // original delivery, then a FULL redelivery as a separate real
       // micro-batch — the dedup state must survive the batch boundary
-      drainChunksToTable(s, deduped, "append", in, Seq(rows, rows))
-        .groupBy($"event_type").agg(count(lit(1)).as("n"))
+      drainFed(Tables.events(s, dir).select($"event_id", $"event_type", $"ts"),
+          "append", redeliver = true) {
+        StreamOps.dedupWithinWatermark(_,
+          tsCol = "ts", horizon = "3650 days", keys = Seq("event_id"))
+      }.groupBy($"event_type").agg(count(lit(1)).as("n"))
         .orderBy($"event_type")
     },
 
@@ -270,20 +278,12 @@ object Streaming {
          |  CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE) AS total_value
          |FROM ev GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
       import s.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       // time-ordered ingest (the transport's per-shard order): chunk
       // boundaries are then exact time splits, so no row of a later
       // micro-batch can fall below the 1-hour watermark and be dropped
-      val rows = Tables.events(s, dir)
-        .select($"ts", $"value")
-        .as[(java.sql.Timestamp, Double)]
-        .collect().sortBy(_._1.getTime).toSeq
-      val in = MemoryStream[(java.sql.Timestamp, Double)](s)
-      val agg = StreamOps.tumblingCounts(
-        in.toDF().toDF("ts", "value"),
-        tsCol = "ts", width = "1 day", horizon = "1 hour")
-      drainChunksToTable(s, agg, "complete", in, mbChunks(rows))
-        // daily windows start at midnight, so the date IS the window
+      drainFed(Tables.events(s, dir).select($"ts", $"value"), "complete", orderBy = Seq("ts")) {
+        StreamOps.tumblingCounts(_, tsCol = "ts", width = "1 day", horizon = "1 hour")
+      } // daily windows start at midnight, so the date IS the window
         .select($"wstart".cast("date").as("wday"), $"n", $"total_value")
         .orderBy($"wday")
     },
@@ -305,20 +305,16 @@ object Streaming {
         |FROM nd GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
       import s.implicits._
       import graft.functions.Text
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      val rows = Tables.load(s, dir, "documents")
-        .select($"doc_id", $"lang", $"text")
-        .as[(Long, String, String)].collect().toSeq
-      val in = MemoryStream[(Long, String, String)](s)
-      val gated = in.toDF().toDF("doc_id", "lang", "text")
-        .select($"lang",
+      drainFed(Tables.load(s, dir, "documents").select($"doc_id", $"lang", $"text"),
+          "complete") {
+        _.select($"lang",
           (Text.wsTokenCount($"text") >= 50L).cast("long").as("is_long"),
           (Text.punctCount($"text") * 10 <=
             length(regexp_replace(Text.normalize($"text"), " ", ""))).cast("long").as("is_clean"))
-        .groupBy($"lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum($"is_long").as("n_long"), sum($"is_clean").as("n_clean"))
-      drainChunksToTable(s, gated, "complete", in, mbChunks(rows)).orderBy($"lang")
+          .groupBy($"lang")
+          .agg(count(lit(1)).as("n_docs"),
+            sum($"is_long").as("n_long"), sum($"is_clean").as("n_clean"))
+      }.orderBy($"lang")
     },
 
     // ---- s9: streaming content dedup — the ingest-side twin of d1:
@@ -335,20 +331,13 @@ object Streaming {
         |FROM nd GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
       import s.implicits._
       import graft.functions.Text
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      val rows = Tables.load(s, dir, "documents")
-        .select($"lang", $"text")
-        .as[(String, String)].collect().toSeq
-      val in = MemoryStream[(String, String, java.sql.Timestamp)](s)
       val t0 = new java.sql.Timestamp(86400000L)
-      val stamped = rows.map { case (l, t) => (l, t, t0) }
-      val deduped = StreamOps.dedupWithinWatermark(
-        in.toDF().toDF("lang", "text", "ts")
-          .withColumn("fp", Text.fingerprint($"text")),
-        tsCol = "ts", horizon = "3650 days", keys = Seq("lang", "fp"))
       // delivery 1, then a full redelivery in its own real micro-batch
-      drainChunksToTable(s, deduped, "append", in, Seq(stamped, stamped))
-        .groupBy($"lang").agg(count(lit(1)).as("n_unique"))
+      drainFed(Tables.load(s, dir, "documents").select($"lang", $"text", lit(t0).as("ts")),
+          "append", redeliver = true) { fed =>
+        StreamOps.dedupWithinWatermark(fed.withColumn("fp", Text.fingerprint($"text")),
+          tsCol = "ts", horizon = "3650 days", keys = Seq("lang", "fp"))
+      }.groupBy($"lang").agg(count(lit(1)).as("n_unique"))
         .orderBy($"lang")
     },
 
@@ -365,7 +354,6 @@ object Streaming {
       batchOracle("d20_decontaminate")) { (s, dir) =>
       import s.implicits._
       import graft.functions.Text
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       // static (batch) eval side: hashed 8-grams of the held-out docs.
       // persisted — a stream-static broadcast re-executes the static
       // BUILD every micro-batch otherwise (the s28 lesson: cache the
@@ -376,20 +364,15 @@ object Streaming {
           $"doc_id".as("eval_id"))
         .persist()
       // the corpus arrives on the stream across several micro-batches
-      val rows = Tables.load(s, dir, "documents")
-        .filter($"doc_id" >= 25)
-        .select($"doc_id", $"text")
-        .as[(Long, String)].collect().toSeq
-      val in = MemoryStream[(Long, String)](s)
-      val pairs = in.toDF().toDF("doc_id", "text")
-        .select($"doc_id", explode(Text.shingleHashes($"text", 8)).as("g"))
-        .join(broadcast(evalGrams), "g")
-        // streaming forbids countDistinct: group to distinct (doc, eval)
-        // pairs on the stream, count them per doc after the drain
-        .groupBy($"doc_id", $"eval_id")
-        .agg(count(lit(1)).as("n_hits"))
-      drainChunksToTable(s, pairs, "complete", in, mbChunks(rows))
-        .groupBy($"doc_id")
+      drainFed(Tables.load(s, dir, "documents").filter($"doc_id" >= 25)
+          .select($"doc_id", $"text"), "complete") {
+        _.select($"doc_id", explode(Text.shingleHashes($"text", 8)).as("g"))
+          .join(broadcast(evalGrams), "g")
+          // streaming forbids countDistinct: group to distinct (doc, eval)
+          // pairs on the stream, count them per doc after the drain
+          .groupBy($"doc_id", $"eval_id")
+          .agg(count(lit(1)).as("n_hits"))
+      }.groupBy($"doc_id")
         .agg(count(lit(1)).as("n_eval_docs"))
         .orderBy($"doc_id")
     },
@@ -429,7 +412,6 @@ object Streaming {
           |GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
       import s.implicits._
       import graft.functions.Text
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val (perms, bands, rows, seed) =
         (LshParams.Perms, LshParams.Bands, LshParams.Rows, LshParams.Seed)
       val maxBucket = LshParams.MaxBucket
@@ -451,17 +433,13 @@ object Streaming {
         .agg(count(lit(1)).as("bn")).filter($"bn" <= maxBucket)
         .select($"band_idx", $"band_hash")
       val ref = refBands.join(keptBuckets, Seq("band_idx", "band_hash"))
-      val docRows = Tables.load(s, dir, "documents")
-        .filter($"doc_id" >= 250)
-        .select($"doc_id", $"text")
-        .as[(Long, String)].collect().toSeq
-      val in = MemoryStream[(Long, String)](s)
-      val pairs = bandHashes(in.toDF().toDF("doc_id", "text"))
-        .join(ref, Seq("band_idx", "band_hash"))
-        .groupBy($"doc_id", $"ref_id")
-        .agg(count(lit(1)).as("n_bands"))
-      drainChunksToTable(s, pairs, "complete", in, mbChunks(docRows))
-        .groupBy($"doc_id")
+      drainFed(Tables.load(s, dir, "documents").filter($"doc_id" >= 250)
+          .select($"doc_id", $"text"), "complete") {
+        bandHashes(_)
+          .join(ref, Seq("band_idx", "band_hash"))
+          .groupBy($"doc_id", $"ref_id")
+          .agg(count(lit(1)).as("n_bands"))
+      }.groupBy($"doc_id")
         .agg(count(lit(1)).as("n_ref_candidates"))
         .orderBy($"doc_id")
     },
@@ -483,16 +461,12 @@ object Streaming {
         |  CAST(SUM(CASE WHEN rk <= 15 THEN doc_id ELSE 0 END) AS BIGINT) AS admitted_id_sum
         |FROM r GROUP BY source ORDER BY source""".stripMargin) { (s, dir) =>
       import s.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      val docRows = Tables.load(s, dir, "documents")
-        .select($"doc_id", $"source")
-        .as[StreamOps.QuotaDoc].collect().toSeq.sortBy(_.doc_id)
-      val in = MemoryStream[StreamOps.QuotaDoc](s)
-      val gated = StreamOps.quotaGate(in.toDS(), cap = 15L)
       // real micro-batches in doc_id order: the per-source running
       // count must carry across the batch boundaries in GroupState
-      drainChunksToTable(s, gated.toDF(), "append", in, mbChunks(docRows))
-        .groupBy($"source")
+      drainFed(Tables.load(s, dir, "documents").select($"doc_id", $"source"), "append",
+          orderBy = Seq("doc_id")) { fed =>
+        StreamOps.quotaGate(fed.as[StreamOps.QuotaDoc], cap = 15L).toDF()
+      }.groupBy($"source")
         .agg(count(lit(1)).as("n_seen"),
           sum($"admitted".cast("long")).as("n_admitted"),
           sum(when($"admitted", $"doc_id").otherwise(0L)).as("admitted_id_sum"))
@@ -510,21 +484,15 @@ object Streaming {
     GraftQuery.sql("s13_stream_histogram_quantiles",
       batchOracle("e15_mergeable_quantiles")) { (s, dir) =>
       import s.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import org.apache.spark.sql.expressions.Window
-      val rows = Tables.events(s, dir)
-        .select($"ts", $"value")
-        .as[(java.sql.Timestamp, Double)].collect().toSeq
-      val in = MemoryStream[(java.sql.Timestamp, Double)](s)
-      val binned = in.toDF().toDF("ts", "value")
-        .groupBy(date_trunc("day", $"ts").cast("date").as("day"),
-          floor($"value" / 10).cast("long").as("bin"))
-        .agg(count(lit(1)).as("c"))
       val wCum = Window.partitionBy($"day").orderBy($"bin")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val wAll = Window.partitionBy($"day")
-      drainChunksToTable(s, binned, "complete", in, mbChunks(rows))
-        .withColumn("cum", sum($"c").over(wCum))
+      drainFed(Tables.events(s, dir).select($"ts", $"value"), "complete") {
+        _.groupBy(date_trunc("day", $"ts").cast("date").as("day"),
+            floor($"value" / 10).cast("long").as("bin"))
+          .agg(count(lit(1)).as("c"))
+      }.withColumn("cum", sum($"c").over(wCum))
         .withColumn("n", sum($"c").over(wAll))
         .groupBy($"day")
         .agg(max($"n").as("n"),
@@ -547,19 +515,11 @@ object Streaming {
       batchOracle("e18_running_outliers")) { (s, dir) =>
       import s.implicits._
       import graft.streaming.StreamOps.StatEvent
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      val rows = Tables.events(s, dir)
-        .select($"user_id", $"event_id", unix_micros($"ts").as("tsUs"),
-          ($"value".cast("decimal(18,2)") * 100).cast("long").as("vi"),
-          $"value")
-        .as[StatEvent]
-        .collect().sortBy(e => (e.tsUs, e.event_id)).toSeq
-      val in = MemoryStream[StatEvent](s)
-      val flagged = StreamOps.runningOutlierGate(in.toDS(), minPrior = 30L)
       // real time-split micro-batches: each user's (n, Σv, Σv²) must
       // fold across the batch boundaries in GroupState
-      drainChunksToTable(s, flagged.toDF(), "append", in, mbChunks(rows))
-        .select($"user_id", $"event_id", $"value", $"n_prior")
+      drainFed(statEvents(s, dir), "append", orderBy = Seq("tsUs", "event_id")) { fed =>
+        StreamOps.runningOutlierGate(fed.as[StatEvent], minPrior = 30L).toDF()
+      }.select($"user_id", $"event_id", $"value", $"n_prior")
         .orderBy($"user_id", $"event_id")
     },
 
@@ -572,19 +532,14 @@ object Streaming {
     GraftQuery.sql("s15_stream_ohlc_bars",
       batchOracle("e16_ohlc_bars")) { (s, dir) =>
       import s.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      val rows = Tables.events(s, dir)
-        .select($"user_id", $"ts", $"event_id", $"value")
-        .as[(Long, java.sql.Timestamp, Long, Double)].collect().toSeq
-      val in = MemoryStream[(Long, java.sql.Timestamp, Long, Double)](s)
-      val bars = in.toDF().toDF("user_id", "ts", "event_id", "value")
-        .groupBy($"user_id", date_trunc("day", $"ts").cast("date").as("day"))
-        .agg(min_by($"value", struct($"ts", $"event_id")).as("open"),
-          max($"value").as("high"), min($"value").as("low"),
-          max_by($"value", struct($"ts", $"event_id")).as("close"),
-          count(lit(1)).as("n"))
-      drainChunksToTable(s, bars, "complete", in, mbChunks(rows))
-        .orderBy($"user_id", $"day")
+      drainFed(Tables.events(s, dir).select($"user_id", $"ts", $"event_id", $"value"),
+          "complete") {
+        _.groupBy($"user_id", date_trunc("day", $"ts").cast("date").as("day"))
+          .agg(min_by($"value", struct($"ts", $"event_id")).as("open"),
+            max($"value").as("high"), min($"value").as("low"),
+            max_by($"value", struct($"ts", $"event_id")).as("close"),
+            count(lit(1)).as("n"))
+      }.orderBy($"user_id", $"day")
     },
 
     // ---- s16: week-over-week drift on the stream — e19's per-(user,
@@ -597,19 +552,13 @@ object Streaming {
     GraftQuery.sql("s16_stream_weekly_drift",
       batchOracle("e19_weekly_drift")) { (s, dir) =>
       import s.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import org.apache.spark.sql.expressions.Window
-      val rows = Tables.events(s, dir)
-        .select($"user_id", $"ts", $"value")
-        .as[(Long, java.sql.Timestamp, Double)].collect().toSeq
-      val in = MemoryStream[(Long, java.sql.Timestamp, Double)](s)
-      val wk = in.toDF().toDF("user_id", "ts", "value")
-        .groupBy($"user_id", date_trunc("week", $"ts").cast("date").as("week"))
-        .agg(count(lit(1)).as("n"),
-          sum(($"value".cast("decimal(18,2)") * 100).cast("long")).as("s"))
       val w = Window.partitionBy($"user_id").orderBy($"week")
-      drainChunksToTable(s, wk, "complete", in, mbChunks(rows))
-        .withColumn("pn", lag($"n", 1).over(w))
+      drainFed(Tables.events(s, dir).select($"user_id", $"ts", $"value"), "complete") {
+        _.groupBy($"user_id", date_trunc("week", $"ts").cast("date").as("week"))
+          .agg(count(lit(1)).as("n"),
+            sum(($"value".cast("decimal(18,2)") * 100).cast("long")).as("s"))
+      }.withColumn("pn", lag($"n", 1).over(w))
         .withColumn("ps", lag($"s", 1).over(w))
         .select($"user_id", $"week", $"n".as("n_events"), $"s".as("sum_cents"),
           ($"pn".isNotNull &&
@@ -653,64 +602,51 @@ object Streaming {
       // full redelivery pass follows the original), so the dedup stage
       // is load-bearing — without it every count downstream doubles
       // and the hash breaks
-      val root = java.nio.file.Paths.get(
-        graft.util.TempDirs.freshUnder("/dev/shm", "graft-pipeline-log"))
-      try {
-      Tables.load(s, dir, "documents")
-        .select($"doc_id", pmod($"doc_id", lit(4)).as("shard"))
-        .collect().groupBy(_.getLong(1))
-        .foreach { case (shard, rows) =>
-          val chunks = rows.map(_.getLong(0)).sorted.toSeq.grouped(2000).zipWithIndex.toSeq
-          chunks.foreach { case (ds, i) =>
-            ShardedLog.append(root, s"s$shard", i + 1L, ds.map(_.toString))
-          }
-          chunks.foreach { case (ds, i) => // redelivery
-            ShardedLog.append(root, s"s$shard", i + 1000L, ds.map(_.toString))
-          }
-        }
+      val docLog = Tables.load(s, dir, "documents")
+        .select(pmod($"doc_id", lit(4)), $"doc_id", $"doc_id".cast("string"))
       val catalog = Tables.load(s, dir, "documents")
         .select($"doc_id", $"lang", $"text")
       val t0 = new java.sql.Timestamp(86400000L)
-      val enriched = s.readStream.format(ShardedLog.Format)
-        .option("path", root.toString)
-        .option("startingPosition", "trim_horizon")
-        .load()
-        .select($"value".cast("long").as("doc_id"))
-        .join(broadcast(catalog), "doc_id")
-        .select($"lang", Text.fingerprint($"text").as("f"),
-          Text.wsTokenCount($"text").as("n_tok"),
-          Text.markerCount($"text", Seq("the", "a")).as("sc"),
-          lit(t0).as("ts"))
-      val deduped = StreamOps.dedupWithinWatermark(
-        enriched, tsCol = "ts", horizon = "3650 days", keys = Seq("lang", "f"))
-      val statuses = deduped
-        .select($"lang", $"f", $"n_tok", $"sc")
-        .as[(String, String, Long, Long)]
-        .mapPartitions { it =>
-          val rows = it.toVector
-          val (good, rejected) = rows.partition(r => r._3 >= 10 && r._4 >= 1)
-          val throttledOnce = scala.collection.mutable.Set.empty[String]
-          val put: Seq[(String, String)] => Seq[BatchingSink.PutResult] = batch =>
-            batch.map { case (_, f) =>
-              if (f.startsWith("00"))
-                BatchingSink.PutResult(Some("InternalFailure"))
-              else if (f.charAt(2) == '0' && throttledOnce.add(f))
-                BatchingSink.PutResult(Some(BatchingSink.ThrottledCode))
-              else BatchingSink.PutResult(None)
-            }
-          val sunk = new BatchingSink[(String, String)](put, sleeper = _ => ())
-            .run(good.iterator.map(r => (r._1, r._2)))
-            .map {
-              case Right((lang, _)) => (lang, "ok")
-              case Left(BatchingSink.PutError((lang, _), _)) => (lang, "err")
-            }
-          rejected.iterator.map(r => (r._1, "rejected_quality")) ++ sunk
-        }
-      drainToTable(s, statuses.toDF("lang", "status"), "append")
-        .groupBy($"lang", $"status")
+      drainLog(s, "append") { root =>
+        writeLog(root, docLog, chunk = 2000)
+        writeLog(root, docLog, chunk = 2000, firstSeq = 1000L) // redelivery
+      } { log =>
+        val enriched = log.load()
+          .select($"value".cast("long").as("doc_id"))
+          .join(broadcast(catalog), "doc_id")
+          .select($"lang", Text.fingerprint($"text").as("f"),
+            Text.wsTokenCount($"text").as("n_tok"),
+            Text.markerCount($"text", Seq("the", "a")).as("sc"),
+            lit(t0).as("ts"))
+        val deduped = StreamOps.dedupWithinWatermark(
+          enriched, tsCol = "ts", horizon = "3650 days", keys = Seq("lang", "f"))
+        deduped
+          .select($"lang", $"f", $"n_tok", $"sc")
+          .as[(String, String, Long, Long)]
+          .mapPartitions { it =>
+            val rows = it.toVector
+            val (good, rejected) = rows.partition(r => r._3 >= 10 && r._4 >= 1)
+            val throttledOnce = scala.collection.mutable.Set.empty[String]
+            val put: Seq[(String, String)] => Seq[BatchingSink.PutResult] = batch =>
+              batch.map { case (_, f) =>
+                if (f.startsWith("00"))
+                  BatchingSink.PutResult(Some("InternalFailure"))
+                else if (f.charAt(2) == '0' && throttledOnce.add(f))
+                  BatchingSink.PutResult(Some(BatchingSink.ThrottledCode))
+                else BatchingSink.PutResult(None)
+              }
+            val sunk = new BatchingSink[(String, String)](put, sleeper = _ => ())
+              .run(good.iterator.map(r => (r._1, r._2)))
+              .map {
+                case Right((lang, _)) => (lang, "ok")
+                case Left(BatchingSink.PutError((lang, _), _)) => (lang, "err")
+              }
+            rejected.iterator.map(r => (r._1, "rejected_quality")) ++ sunk
+          }
+          .toDF("lang", "status")
+      }.groupBy($"lang", $"status")
         .agg(count(lit(1)).as("n"))
         .orderBy($"lang", $"status")
-      } finally graft.util.TempDirs.delete(root.toString)
     },
 
     // ---- s18: PII gate ON THE INGEST STREAM — d49's detection /
@@ -737,22 +673,18 @@ object Streaming {
         |FROM r GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
       import s.implicits._
       import graft.functions.Text
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      val piiRows = Tables.load(s, dir, "documents")
-        .select($"doc_id", $"lang", $"text")
-        .as[(Long, String, String)].collect().toSeq
-      val in = MemoryStream[(Long, String, String)](s)
       val nPii = Text.PiiPatterns
         .map { case (_, pat, _) => Text.piiCount($"text", pat) }
         .reduce(_ + _)
-      val gated = in.toDF().toDF("doc_id", "lang", "text")
-        .select($"doc_id", $"lang", nPii.as("n_pii"))
-        .groupBy($"lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum($"n_pii").as("n_hits"),
-          sum(($"n_pii" > 0).cast("long")).as("n_flagged"),
-          sum(when($"n_pii" > 0, $"doc_id").otherwise(0L)).as("flagged_id_sum"))
-      drainChunksToTable(s, gated, "complete", in, mbChunks(piiRows)).orderBy($"lang")
+      drainFed(Tables.load(s, dir, "documents").select($"doc_id", $"lang", $"text"),
+          "complete") {
+        _.select($"doc_id", $"lang", nPii.as("n_pii"))
+          .groupBy($"lang")
+          .agg(count(lit(1)).as("n_docs"),
+            sum($"n_pii").as("n_hits"),
+            sum(($"n_pii" > 0).cast("long")).as("n_flagged"),
+            sum(when($"n_pii" > 0, $"doc_id").otherwise(0L)).as("flagged_id_sum"))
+      }.orderBy($"lang")
     },
 
     // ---- s19: per-source TOKEN budget on the doc stream — s12's quota
@@ -779,14 +711,11 @@ object Streaming {
         |FROM w GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
       import s.implicits._
       import graft.functions.Text
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      val docRows = Tables.load(s, dir, "documents")
-        .select($"doc_id", $"source", Text.wsTokenCount($"text").as("n_tok"))
-        .as[StreamOps.TokDoc].collect().toSeq.sortBy(_.doc_id)
-      val in = MemoryStream[StreamOps.TokDoc](s)
-      val gated = StreamOps.tokenQuotaGate(in.toDS(), budget = 800L)
-      drainChunksToTable(s, gated.toDF(), "append", in, mbChunks(docRows))
-        .groupBy($"source")
+      drainFed(Tables.load(s, dir, "documents")
+          .select($"doc_id", $"source", Text.wsTokenCount($"text").as("n_tok")), "append",
+          orderBy = Seq("doc_id")) { fed =>
+        StreamOps.tokenQuotaGate(fed.as[StreamOps.TokDoc], budget = 800L).toDF()
+      }.groupBy($"source")
         .agg(count(lit(1)).as("n_seen"),
           sum($"admitted".cast("long")).as("n_admitted"),
           sum(when($"admitted", $"n_tok").otherwise(0L)).as("admitted_tokens"),
@@ -808,19 +737,11 @@ object Streaming {
       batchOracle("e22_ewma_smooth")) { (s, dir) =>
       import s.implicits._
       import graft.streaming.StreamOps.StatEvent
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      val rows = Tables.events(s, dir)
-        .select($"user_id", $"event_id", unix_micros($"ts").as("tsUs"),
-          ($"value".cast("decimal(18,2)") * 100).cast("long").as("vi"),
-          $"value")
-        .as[StatEvent]
-        .collect().sortBy(e => (e.tsUs, e.event_id)).toSeq
-      val in = MemoryStream[StatEvent](s)
-      val smoothed = StreamOps.ewmaGate(in.toDS())
       // time-split micro-batches: each user's 7-tap ring must fold
       // across the batch boundaries in GroupState
-      drainChunksToTable(s, smoothed.toDF(), "append", in, mbChunks(rows))
-        .select($"user_id", $"event_id", $"ewma_x256")
+      drainFed(statEvents(s, dir), "append", orderBy = Seq("tsUs", "event_id")) { fed =>
+        StreamOps.ewmaGate(fed.as[StatEvent]).toDF()
+      }.select($"user_id", $"event_id", $"ewma_x256")
         .orderBy($"user_id", $"event_id")
     },
 
@@ -848,14 +769,11 @@ object Streaming {
       import s.implicits._
       import graft.functions.Text
       import graft.streaming.StreamOps.HHDoc
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      val docRows = Tables.load(s, dir, "documents")
-        .select($"doc_id", $"source", Text.tokens($"text").as("toks"))
-        .as[HHDoc].collect().toSeq.sortBy(_.doc_id)
-        .map(d => d.copy(toks = d.toks.filter(_.nonEmpty)))
-      val in = MemoryStream[HHDoc](s)
-      val sketched = StreamOps.heavyHitterGate(in.toDS(), capacity = 31)
-      val snaps = drainChunksToTable(s, sketched.toDF(), "append", in, mbChunks(docRows))
+      val snaps = drainFed(Tables.load(s, dir, "documents")
+          .select($"doc_id", $"source", filter(Text.tokens($"text"), _ =!= "").as("toks")),
+          "append", orderBy = Seq("doc_id")) { fed =>
+        StreamOps.heavyHitterGate(fed.as[HHDoc], capacity = 31).toDF()
+      }
       // last snapshot per source = the full-stream sketch
       val wLast = org.apache.spark.sql.expressions.Window
         .partitionBy($"source").orderBy($"n".desc)
@@ -903,23 +821,19 @@ object Streaming {
         |GROUP BY c.vec_id ORDER BY c.vec_id""".stripMargin) { (s, dir) =>
       import s.implicits._
       import graft.functions.Vectors
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       graft.functions.GraftFunctions.register(s)
       val nv = Tables.load(s, dir, "embeddings")
         .select($"vec_id", $"embedding", Vectors.norm($"embedding").as("nrm"))
       val ref = nv.filter($"vec_id" % 5 === 0)
         .select($"vec_id".as("r_id"), $"embedding".as("r_emb"), $"nrm".as("r_nrm"))
         .persist() // rebuilt per micro-batch otherwise (the s28 lesson)
-      val streamRows = nv.filter($"vec_id" % 5 =!= 0)
-        .as[(Long, Seq[Float], Double)].collect().toSeq.sortBy(_._1)
-      val in = MemoryStream[(Long, Seq[Float], Double)](s)
-      val flagged = in.toDF().toDF("vec_id", "emb", "nrm")
-        .join(broadcast(ref),
-          Vectors.cosineWithNorms($"emb", $"r_emb", $"nrm", $"r_nrm") >= 0.4)
-        .select($"vec_id", $"r_id",
-          Vectors.cosineWithNorms($"emb", $"r_emb", $"nrm", $"r_nrm").as("cos"))
-      drainChunksToTable(s, flagged, "append", in, mbChunks(streamRows))
-        .groupBy($"vec_id")
+      drainFed(nv.filter($"vec_id" % 5 =!= 0)
+          .select($"vec_id", $"embedding".as("emb"), $"nrm"), "append", orderBy = Seq("vec_id")) {
+        _.join(broadcast(ref),
+            Vectors.cosineWithNorms($"emb", $"r_emb", $"nrm", $"r_nrm") >= 0.4)
+          .select($"vec_id", $"r_id",
+            Vectors.cosineWithNorms($"emb", $"r_emb", $"nrm", $"r_nrm").as("cos"))
+      }.groupBy($"vec_id")
         .agg(count(lit(1)).as("n_ref_matches"), round(max($"cos"), 6).as("max_cos"))
         .orderBy($"vec_id")
     },
@@ -937,7 +851,6 @@ object Streaming {
          |  AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR
          |GROUP BY c.user_id ORDER BY c.user_id""".stripMargin) { (s, dir) =>
       import s.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val ev = Tables.events(s, dir)
         .select($"user_id", $"event_type", $"ts")
         .as[(Long, String, java.sql.Timestamp)]
@@ -990,24 +903,19 @@ object Streaming {
     GraftQuery.sql("s23_stream_bloom_gate",
       DecontaminationFilter.oracleSql) { (s, dir) =>
       import s.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import graft.functions.Text
       graft.functions.GraftFunctions.register(s)
       val docs = Tables.load(s, dir, "documents")
       val bfBytes = DecontaminationFilter.bytes(docs)
-      val rows = docs.filter($"doc_id" >= 25)
-        .select($"doc_id", $"text").as[(Long, String)]
-        .collect().toSeq.sortBy(_._1)
-      val in = MemoryStream[(Long, String)](s)
-      val gate = in.toDF().toDF("doc_id", "text")
-        .select($"doc_id", Text.shingleHashes($"text", 8).as("sh"))
-        .select($"doc_id", size($"sh").cast("long").as("n_grams"),
-          size(filter($"sh",
-            g => call_function("bloom_contains_long", g, lit(bfBytes))))
-            .cast("long").as("n_hits"))
-        .filter($"n_hits" > 0)
-      drainChunksToTable(s, gate, "append", in, mbChunks(rows))
-        .orderBy($"doc_id")
+      drainFed(docs.filter($"doc_id" >= 25).select($"doc_id", $"text"), "append",
+          orderBy = Seq("doc_id")) {
+        _.select($"doc_id", Text.shingleHashes($"text", 8).as("sh"))
+          .select($"doc_id", size($"sh").cast("long").as("n_grams"),
+            size(filter($"sh",
+              g => call_function("bloom_contains_long", g, lit(bfBytes))))
+              .cast("long").as("n_hits"))
+          .filter($"n_hits" > 0)
+      }.orderBy($"doc_id")
     },
 
     // ---- s24: ONLINE transition counting — e27's Markov edge
@@ -1023,16 +931,11 @@ object Streaming {
       batchOracle("e27_transition_matrix")) { (s, dir) =>
       import s.implicits._
       import StreamOps.TypedEvent
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      val rows = Tables.events(s, dir)
-        .select($"user_id", $"event_id", unix_micros($"ts").as("tsUs"),
-          $"event_type")
-        .as[TypedEvent]
-        .collect().sortBy(e => (e.tsUs, e.event_id)).toSeq
-      val in = MemoryStream[TypedEvent](s)
-      val edges = StreamOps.transitionGate(in.toDS())
-      drainChunksToTable(s, edges.toDF(), "append", in, mbChunks(rows))
-        .groupBy($"prev_type", $"next_type")
+      drainFed(Tables.events(s, dir)
+          .select($"user_id", $"event_id", unix_micros($"ts").as("tsUs"), $"event_type"),
+          "append", orderBy = Seq("tsUs", "event_id")) { fed =>
+        StreamOps.transitionGate(fed.as[TypedEvent]).toDF()
+      }.groupBy($"prev_type", $"next_type")
         .agg(count(lit(1)).as("n"))
         .withColumn("p_bps",
           expr("(n * 10000) div sum(n) over (partition by prev_type)"))
@@ -1050,17 +953,12 @@ object Streaming {
     // batch-boundary effect would break the hash.
     GraftQuery.sql("s25_stream_vad", Docs.vadOracleSql) { (s, dir) =>
       import s.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      val rows = Tables.load(s, dir, "documents")
-        .select($"doc_id", $"text").as[(Long, String)]
-        .collect().toSeq.sortBy(_._1)
-      val in = MemoryStream[(Long, String)](s)
-      val media = graft.operators.Multimodal.mediaFromDocuments(
-        s, in.toDF().toDF("doc_id", "text"))
-      val vad = graft.operators.Multimodal
-        .detectVoice(media, frame = 160, meanSqThresh = 900L)
-      drainChunksToTable(s, vad.toDF(), "append", in, mbChunks(rows))
-        .orderBy($"doc_id")
+      import graft.operators.Multimodal
+      drainFed(Tables.load(s, dir, "documents").select($"doc_id", $"text"), "append",
+          orderBy = Seq("doc_id")) { fed =>
+        Multimodal.detectVoice(Multimodal.mediaFromDocuments(s, fed),
+          frame = 160, meanSqThresh = 900L).toDF()
+      }.orderBy($"doc_id")
     },
 
     // ---- s26: binary payload fidelity END-TO-END through the
@@ -1080,9 +978,7 @@ object Streaming {
         |  CAST(COUNT(*) AS BIGINT) AS n
         |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val root = java.nio.file.Paths.get(
-        graft.util.TempDirs.freshUnder("/dev/shm", "graft-binlog"))
-      try {
+      drainLog(s, "complete") { root =>
         val writerRoot = root.toString
         Tables.load(s, dir, "documents")
           .select($"doc_id".cast("string").as("k"),
@@ -1098,14 +994,11 @@ object Streaming {
                 throw new IllegalStateException(s"binary put failed: $r")
             }
           }
-        val stream = s.readStream.format(ShardedLog.Format)
-          .option("path", writerRoot)
-          .option("startingPosition", "trim_horizon")
-          .load()
+      } {
+        _.load()
           .select(base64($"value_bin").as("b64"))
           .groupBy($"b64").agg(count(lit(1)).as("n"))
-        drainToTable(s, stream, "complete").orderBy($"b64")
-      } finally graft.util.TempDirs.delete(root.toString)
+      }.orderBy($"b64")
     },
 
     // ---- s27: shard-skew monitor — the transport-operations twin of
@@ -1132,41 +1025,23 @@ object Streaming {
          |    THEN 1 ELSE 0 END AS BIGINT) AS hot
          |FROM g ORDER BY wday, shard""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val root = java.nio.file.Paths.get(
-        graft.util.TempDirs.freshUnder("/dev/shm", "graft-skewlog"))
-      try {
-        // the s1 harness layout with the event time riding in the
-        // payload: per-shard files in (event_id ≡ time) order
-        Tables.events(s, dir)
-          .select($"event_id", unix_micros($"ts").as("us"),
-            pmod($"user_id", lit(4)).as("shard"))
-          .collect()
-          .groupBy(_.getLong(2))
-          .foreach { case (shard, rows) =>
-            rows.sortBy(_.getLong(0)).toSeq.grouped(2000).zipWithIndex.foreach {
-              case (rs, i) =>
-                ShardedLog.append(root, s"s$shard", i + 1L,
-                  rs.map(r => s"${r.getLong(0)}|${r.getLong(1)}"))
-            }
-          }
-        val counts = s.readStream.format(ShardedLog.Format)
-          .option("path", root.toString)
-          .option("startingPosition", "trim_horizon")
-          .load()
+      // the s1 harness layout with the event time riding in the
+      // payload: per-shard files in (event_id ≡ time) order
+      val log = eventLog(s, dir, format_string("%d|%d", $"event_id", unix_micros($"ts")))
+      val wDay = org.apache.spark.sql.expressions.Window.partitionBy($"wday")
+      drainLog(s, "complete")(writeLog(_, log, chunk = 2000)) {
+        _.load()
           .select($"shard",
             timestamp_micros(split($"value", "\\|")(1).cast("long")).as("ts"))
           .withWatermark("ts", "1 hour")
           .groupBy(window($"ts", "1 day").as("w"), $"shard")
           .agg(count(lit(1)).as("n"))
-        val wDay = org.apache.spark.sql.expressions.Window.partitionBy($"wday")
-        drainToTable(s, counts, "complete")
-          .select($"w.start".cast("date").as("wday"), $"shard", $"n")
-          .withColumn("tot", sum($"n").over(wDay))
-          .select($"wday", $"shard", $"n",
-            expr("n * 10000 div tot").as("share_bp"),
-            ($"n" * 10000 > $"tot" * 5000).cast("long").as("hot"))
-          .orderBy($"wday", $"shard")
-      } finally graft.util.TempDirs.delete(root.toString)
+      }.select($"w.start".cast("date").as("wday"), $"shard", $"n")
+        .withColumn("tot", sum($"n").over(wDay))
+        .select($"wday", $"shard", $"n",
+          expr("n * 10000 div tot").as("share_bp"),
+          ($"n" * 10000 > $"tot" * 5000).cast("long").as("hot"))
+        .orderBy($"wday", $"shard")
     },
 
     // ---- s28: the trigram-LM fluency gate run ON THE STREAM — d82's
@@ -1195,18 +1070,13 @@ object Streaming {
       // the trained model table once and joining micro-batches
       // against it)
       val (c1, big, tri, st) = Docs.lmCounts(s, dir, materialize = true)
-      val rows = Tables.load(s, dir, "documents")
-        .filter($"doc_id" < 100)
-        .select($"doc_id", $"text").as[(Long, String)]
-        .collect().sortBy(_._1).toSeq
-      val in = MemoryStream[(Long, String)](s)
       // Docs.lmPositions VERBATIM (stream-legal: pure projection) —
       // the same triple derivation d82's eval side and the training
       // counts run, so batch and stream cannot drift
-      val positions = Docs.lmPositions(in.toDF().toDF("doc_id", "text"))
-      val scored = Docs.lmScore(positions, c1, big, tri, st)
-      drainChunksToTable(s, scored, "complete", in, mbChunks(rows))
-        .orderBy($"doc_id")
+      drainFed(Tables.load(s, dir, "documents").filter($"doc_id" < 100)
+          .select($"doc_id", $"text"), "complete", orderBy = Seq("doc_id")) { fed =>
+        Docs.lmScore(Docs.lmPositions(fed), c1, big, tri, st)
+      }.orderBy($"doc_id")
     },
 
     // ---- s29: the burst monitor ON THE STREAM — e34's daily per-type
@@ -1221,21 +1091,16 @@ object Streaming {
     GraftQuery.sql("s29_stream_burst", batchOracle("e34_burst_days")) {
       (s, dir) =>
       import s.implicits._
-      val rows = Tables.events(s, dir)
-        .select($"ts", $"event_type")
-        .as[(java.sql.Timestamp, String)]
-        .collect().sortBy(_._1.getTime).toSeq
-      val in = MemoryStream[(java.sql.Timestamp, String)](s)
-      val counts = in.toDF().toDF("ts", "event_type")
-        .withWatermark("ts", "1 hour")
-        .groupBy($"event_type", window($"ts", "1 day").as("w"))
-        .agg(count(lit(1)).as("n"))
       // localCheckpoint: burstFromDaily reads the drained grid three
       // ways (type alphabet, day bounds, the left join) — self-joining
       // the memory-sink view trips conflicting-reference resolution,
       // and the grid is alphabet × span tiny anyway
-      val g = drainChunksToTable(s, counts, "complete", in, mbChunks(rows))
-        .select($"event_type", $"w.start".cast("date").as("wday"), $"n")
+      val g = drainFed(Tables.events(s, dir).select($"ts", $"event_type"), "complete",
+          orderBy = Seq("ts")) {
+        _.withWatermark("ts", "1 hour")
+          .groupBy($"event_type", window($"ts", "1 day").as("w"))
+          .agg(count(lit(1)).as("n"))
+      }.select($"event_type", $"w.start".cast("date").as("wday"), $"n")
         .localCheckpoint(true)
       Events.burstFromDaily(g).orderBy($"event_type", $"wday")
     }

@@ -12,6 +12,8 @@
 #
 # Usage: tools/drill_kill.sh        (builds assumed: sbt compile done)
 # Exit 0 = both drills green; nonzero with a DRILL FAIL line otherwise.
+# Each drill's /tmp/drill_* output is deleted when it passes and kept
+# when it fails.
 set -uo pipefail
 cd "$(dirname "$0")/.."
 
@@ -60,6 +62,7 @@ fi
 grep -Eq '^(PASS|ROWS)' "$OUT/check.log" \
   || fail "drill1: check.py emitted no PASS/ROWS lines (see $OUT/check.log)"
 echo "drill1 PASS: kill -9 mid-Verify left valid oracle_sql.json + $n verified entries ($pruned mid-write pruned)"
+rm -rf "$OUT"  # a FAIL keeps it: its message names the dump and logs
 
 # ---------- drill 2: 60 s bench budget samples every family ----------
 BLOG=$(mktemp /tmp/drill_bench.XXXXXX)
@@ -101,3 +104,4 @@ print(f"drill2 PASS: 60 s budget measured {len(qmap)} entries across "
       f"(complete={summary.get('complete')}, skipped_n={summary.get('skipped_n')}); "
       f"warm-up: {'; '.join(notes) or 'no note'}")
 EOF
+rm -f "$BLOG"  # a FAIL keeps it: its message names the log
