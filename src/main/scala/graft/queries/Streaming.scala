@@ -1,20 +1,25 @@
 package graft.queries
 
 import graft.Tables
-import graft.streaming.{BatchingSink, FileRecordWriter, ShardedLog, StreamOps, ToRecord}
+import graft.streaming.{BatchingSink, FileRecordWriter, ShardedLog, ShardedLogWriter, StreamOps,
+  ToRecord}
 import java.nio.file.{Path, Paths}
 import java.util.UUID
-import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftSqlBridge, Row, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.streaming.{DataStreamReader, StreamingQuery}
+import org.apache.spark.sql.streaming.DataStreamReader
+import org.apache.spark.sql.types.StructType
 
 /** Streaming transport operators (SURVEY.md §2.1) run end-to-end as real
   * Structured Streaming queries against driver testdata, then surfaced
   * as bounded DataFrames so the DuckDB oracle can hash-check them like
   * any batch query: the stream is drained with processAllAvailable over
   * a memory sink, so the result is exact, not a sample.
+  *
+  * Every streaming entry reads its input through the `ShardedLog`
+  * source, from a fixture log `ShardedLogWriter.write` lays out on the
+  * executors (`drainLog`; `drainFed` for a table's rows).
   *
   * s3 (trigger rate limits) appears twice: per-batch cap enforcement is
   * asserted in ShardedLogSpec (where progress is observable), and
@@ -41,8 +46,8 @@ object Streaming {
     * split (the stream/batch parity its oracle pins). Against 4 feeds /
     * 8 partitions / 8 batches this shape took the s-family from 45.6 to
     * 31.7 s at sf0.1 on 32 cores (BENCH_NOTES "Round 7"):
-    *  - `DrainChunks` feeds per `drainFed` drain, the fewest that still
-    *    run every cross-batch merge path;
+    *  - `DrainChunks` files, so micro-batches, per `drainFed` drain, the
+    *    fewest that still run every cross-batch merge path;
     *  - `DrainParts` state partitions (the drain session's
     *    `shuffle.partitions`): drain cost is per-partition state-store
     *    checkpointing, not data volume; a deployment sizes this to key
@@ -52,10 +57,11 @@ object Streaming {
   private[graft] val DrainParts = 4
   private val DrainBatches = 4
 
-  /** Runs one bounded drain in its own session, a clone of the caller's
-    * (the isolation Spark's StreamExecution itself takes at query start):
-    * only the clone gets the drain confs, so concurrent drains and batch
-    * entries never see each other's `shuffle.partitions`. The drain confs
+  /** Runs one bounded drain to the end of its input in its own session,
+    * a clone of the caller's (the isolation Spark's StreamExecution
+    * itself takes at query start): only the clone gets the drain confs,
+    * so concurrent drains and batch entries never see each other's
+    * `shuffle.partitions`. The drain confs
     * are `DrainParts` state partitions and the state-store PROVIDER
     * selected by the caller's `graft.stream.stateStore`: the default
     * HDFS-backed in-memory store, or `rocksdb` for Spark's RocksDB
@@ -66,8 +72,7 @@ object Streaming {
     * caller's session, by their analyzed plans. Both the clone and the
     * session Spark clones again for the query's run are detached from the
     * context's listener bus afterwards. */
-  private def drain(spark: SparkSession, df: DataFrame, outputMode: String)(
-      feed: StreamingQuery => Unit): DataFrame = {
+  private def drain(spark: SparkSession, df: DataFrame, outputMode: String): DataFrame = {
     val session = GraftSqlBridge.cloneSession(spark)
     session.conf.set(SQLConf.SHUFFLE_PARTITIONS.key, DrainParts.toString)
     if (spark.conf.get("graft.stream.stateStore", "hdfs") == "rocksdb")
@@ -82,7 +87,7 @@ object Streaming {
         .outputMode(outputMode)
         .option("checkpointLocation", ckptDir())
         .start()
-      try feed(q) finally {
+      try q.processAllAvailable() finally {
         q.stop()
         GraftSqlBridge.detachStreams(GraftSqlBridge.runSession(q))
       }
@@ -90,39 +95,30 @@ object Streaming {
     } finally GraftSqlBridge.detachStreams(session)
   }
 
-  private def drainToTable(spark: SparkSession, df: DataFrame,
-                           outputMode: String): DataFrame =
-    drain(spark, df, outputMode)(_.processAllAvailable())
-
-  /** Runs `pipeline` as a bounded drain over `input`, fed as real
-    * micro-batches: the query STARTS BEFORE any data exists and each feed
-    * is added between processAllAvailable calls, so cross-batch state
-    * continuity (GroupState folds, complete-mode re-aggregation,
-    * within-watermark dedup across a redelivery batch) actually executes.
-    * Adding every feed before the first processAllAvailable would collapse
-    * them into ONE micro-batch and silently skip the merge path
-    * (FeedBatchSpec counts the batches). The stream's schema is `input`'s
-    * and its row order is the feed order, split into `DrainChunks`
-    * successive feeds (a 0/1-row input cannot split and runs a single
-    * batch); `redeliver` feeds the whole input twice instead, the
-    * at-least-once redelivery as its own batch. The input is collected to
-    * the driver here, the one place a distributed feed would go; an entry
-    * whose fold depends on arrival order names its total order in
-    * `orderBy`, sorted after the collect (a Spark `orderBy` adds a sampling
-    * job and a shuffle: +11-29% on those entries, BENCH_NOTES "r19"). */
+  /** Runs `pipeline` as a bounded drain over `input` in real
+    * micro-batches, so cross-batch state continuity (GroupState folds,
+    * complete-mode re-aggregation, within-watermark dedup across a
+    * redelivery batch) actually executes. Each row is one record of ONE
+    * shard, written as `DrainChunks` files (a ceiling split; a 0/1-row
+    * input runs a single batch) or, with `redeliver`, as the whole input
+    * at sequences 1 and 2. The drain admits one file per trigger: each
+    * batch is one input partition whose rows arrive in file order
+    * (FeedBatchSpec counts them), decoded back to `input`'s schema. An
+    * entry whose fold depends on arrival order names its total order in
+    * `orderBy`, which the writer's one task sorts by (a Spark `orderBy`
+    * adds a range-sampling job: +11-29% on those entries, BENCH_NOTES
+    * "r19"). */
   private def drainFed(input: DataFrame, outputMode: String, orderBy: Seq[String] = Nil,
                        redeliver: Boolean = false)(
       pipeline: DataFrame => DataFrame): DataFrame = {
-    val keys = orderBy.map(input.schema.fieldIndex)
-    val byKeys: Ordering[Row] = (a, b) => keys.iterator
-      .map(i => a.getAs[Comparable[Any]](i).compareTo(b.get(i))).find(_ != 0).getOrElse(0)
-    val rows = input.collect().toSeq.sorted(byKeys)
-    val in = MemoryStream[Row](input.sparkSession)(Encoders.row(input.schema))
-    val feeds =
-      if (redeliver) Seq(rows, rows)
-      else rows.grouped(math.max(1, (rows.size + DrainChunks - 1) / DrainChunks)).toSeq
-    drain(input.sparkSession, pipeline(in.toDF()), outputMode) { q =>
-      feeds.foreach { f => in.addData(f); q.processAllAvailable() }
+    val rows = input.select(lit("feed") +: orderBy.map(input.col) :+
+      encode(input.columns.map(input.col).toSeq: _*): _*)
+    drainLog(input.sparkSession, outputMode) { root =>
+      if (redeliver) Seq(1L, 2L).foreach(ShardedLogWriter.write(root, rows, Int.MaxValue, _))
+      else ShardedLogWriter.write(root, rows,
+        chunk = math.max(1L, (input.count() + DrainChunks - 1) / DrainChunks).toInt)
+    } { log =>
+      pipeline(decode(log.option("maxFilesPerTrigger", "1").load(), input.schema))
     }
   }
 
@@ -135,25 +131,27 @@ object Streaming {
     val root = Paths.get(graft.util.TempDirs.freshUnder("/dev/shm", "graft-log"))
     try {
       write(root)
-      drainToTable(s, pipeline(s.readStream.format(ShardedLog.Format)
+      drain(s, pipeline(s.readStream.format(ShardedLog.Format)
         .option("path", root.toString)
         .option("startingPosition", "trim_horizon")), outputMode)
     } finally graft.util.TempDirs.delete(root.toString)
   }
 
-  /** Lays out `(shard, id, payload)` rows as per-shard files of `chunk`
-    * records in id order, numbered from `firstSeq`. */
-  private def writeLog(root: Path, rows: DataFrame, chunk: Int, firstSeq: Long = 1L): Unit =
-    rows.collect().groupBy(_.getLong(0)).foreach { case (shard, rs) =>
-      rs.sortBy(_.getLong(1)).grouped(chunk).zipWithIndex.foreach { case (c, i) =>
-        ShardedLog.append(root, s"s$shard", firstSeq + i, c.map(_.getString(2)).toSeq)
-      }
-    }
+  /** One row as one record: its columns as JSON with microsecond
+    * timestamps (Spark's default keeps milliseconds; nearly every
+    * `events.ts` has microseconds). A payload that does not parse fails
+    * the drain instead of becoming a null row. */
+  private val JsonOptions = Map(
+    "timestampFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX", "mode" -> "FAILFAST")
+  private def encode(cols: Column*): Column = to_json(struct(cols: _*), JsonOptions)
+  private def decode(log: DataFrame, schema: StructType): DataFrame =
+    log.select(from_json(col("value"), schema, JsonOptions).as("r")).select("r.*")
 
-  /** events as log rows: shard = user_id mod 4, id = event_id. */
+  /** events as log rows: shard s<user_id mod 4>, in event_id order. */
   private def eventLog(s: SparkSession, dir: String,
                        payload: Column = col("event_id").cast("string")): DataFrame =
-    Tables.events(s, dir).select(pmod(col("user_id"), lit(4)), col("event_id"), payload)
+    Tables.events(s, dir).select(concat(lit("s"), pmod(col("user_id"), lit(4))),
+      col("event_id"), payload)
 
   /** events as `StreamOps.StatEvent` rows, fed in (tsUs, event_id) order:
     * the in-order ingest s14 and s20 fold per user. */
@@ -185,7 +183,7 @@ object Streaming {
          |  MIN(event_id) AS min_id, MAX(event_id) AS max_id
          |FROM ev GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
       import s.implicits._
-      drainLog(s, "complete")(writeLog(_, eventLog(s, dir), chunk = 2000)) {
+      drainLog(s, "complete")(ShardedLogWriter.write(_, eventLog(s, dir), chunk = 2000)) {
         _.load()
           .select($"shard", $"value".cast("long").as("event_id"))
           .groupBy($"shard")
@@ -212,7 +210,7 @@ object Streaming {
       // time, not operator work)
       val total = Tables.events(s, dir).count()
       val chunk = math.max(500L, total / 4 / DrainBatches + 1).toInt
-      drainLog(s, "complete")(writeLog(_, eventLog(s, dir), chunk)) {
+      drainLog(s, "complete")(ShardedLogWriter.write(_, eventLog(s, dir), chunk)) {
         _.option("maxFilesPerTrigger", "1").load()
           .select($"shard", $"value".cast("long").as("event_id"))
           .groupBy($"shard")
@@ -603,13 +601,13 @@ object Streaming {
       // is load-bearing — without it every count downstream doubles
       // and the hash breaks
       val docLog = Tables.load(s, dir, "documents")
-        .select(pmod($"doc_id", lit(4)), $"doc_id", $"doc_id".cast("string"))
+        .select(concat(lit("s"), pmod($"doc_id", lit(4))), $"doc_id", $"doc_id".cast("string"))
       val catalog = Tables.load(s, dir, "documents")
         .select($"doc_id", $"lang", $"text")
       val t0 = new java.sql.Timestamp(86400000L)
       drainLog(s, "append") { root =>
-        writeLog(root, docLog, chunk = 2000)
-        writeLog(root, docLog, chunk = 2000, firstSeq = 1000L) // redelivery
+        ShardedLogWriter.write(root, docLog, chunk = 2000)
+        ShardedLogWriter.write(root, docLog, chunk = 2000, firstSeq = 1000L) // redelivery
       } { log =>
         val enriched = log.load()
           .select($"value".cast("long").as("doc_id"))
@@ -851,21 +849,19 @@ object Streaming {
          |  AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR
          |GROUP BY c.user_id ORDER BY c.user_id""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val ev = Tables.events(s, dir)
-        .select($"user_id", $"event_type", $"ts")
-        .as[(Long, String, java.sql.Timestamp)]
-        .collect().toSeq
-      val clicks = MemoryStream[(Long, java.sql.Timestamp)](s)
-      val purchases = MemoryStream[(Long, java.sql.Timestamp)](s)
-      clicks.addData(ev.collect { case (u, "click", t) => (u, t) })
-      purchases.addData(ev.collect { case (u, "purchase", t) => (u, t) })
-      val c = clicks.toDF().toDF("c_user", "c_ts").withWatermark("c_ts", "2 hours")
-      val p = purchases.toDF().toDF("p_user", "p_ts").withWatermark("p_ts", "2 hours")
-      val joined = c.join(p,
-        $"c_user" === $"p_user" &&
-          $"p_ts" >= $"c_ts" && $"p_ts" <= $"c_ts" + expr("INTERVAL 1 HOUR"))
-      drainToTable(s, joined, "append")
-        .groupBy($"c_user".as("user_id"))
+      // one fixture log, a shard per side in event_id (≡ time) order;
+      // unthrottled, the first trigger admits all of it as one batch
+      val ev = Tables.events(s, dir).filter($"event_type".isin("click", "purchase"))
+      val side = ev.select($"user_id", $"ts").schema
+      drainLog(s, "append")(ShardedLogWriter.write(_,
+          ev.select($"event_type", $"event_id", encode($"user_id", $"ts")), chunk = 2000)) { log =>
+        def stream(shard: String, user: String, ts: String) =
+          decode(log.load().filter($"shard" === shard), side).toDF(user, ts)
+            .withWatermark(ts, "2 hours")
+        stream("click", "c_user", "c_ts").join(stream("purchase", "p_user", "p_ts"),
+          $"c_user" === $"p_user" &&
+            $"p_ts" >= $"c_ts" && $"p_ts" <= $"c_ts" + expr("INTERVAL 1 HOUR"))
+      }.groupBy($"c_user".as("user_id"))
         .agg(count(lit(1)).as("n_pairs"))
         .orderBy($"user_id")
     },
@@ -1029,7 +1025,7 @@ object Streaming {
       // payload: per-shard files in (event_id ≡ time) order
       val log = eventLog(s, dir, format_string("%d|%d", $"event_id", unix_micros($"ts")))
       val wDay = org.apache.spark.sql.expressions.Window.partitionBy($"wday")
-      drainLog(s, "complete")(writeLog(_, log, chunk = 2000)) {
+      drainLog(s, "complete")(ShardedLogWriter.write(_, log, chunk = 2000)) {
         _.load()
           .select($"shard",
             timestamp_micros(split($"value", "\\|")(1).cast("long")).as("ts"))

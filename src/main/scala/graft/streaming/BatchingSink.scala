@@ -42,25 +42,18 @@ object BatchingSink {
       throttleBackoffMs: Long = 800L)
 
   /** Sink wired to an injected client ([[RecordWriter]], the
-    * [[Transport]] seam) — the analog of the reference's `withClient`
-    * entry point (KinesisGraphStage.scala:28-30), which takes the AWS
-    * client and runs the same buffer/flush/requeue machinery over its
-    * `putRecords`. */
+    * [[Transport]] seam), records serialized through the ToRecord
+    * typeclass (reference ToPutRecordsRequest.scala) — the analog of the
+    * reference's `withClient` entry point (KinesisGraphStage.scala:28-30),
+    * which takes the AWS client and runs the same
+    * buffer/flush/requeue machinery over its `putRecords`. */
   def over[A: ToRecord](
       writer: RecordWriter,
-      config: Config = Config(),
-      sleeper: Long => Unit = Thread.sleep): BatchingSink[A] =
-    serialized[A](writer.putRecords, config, sleeper)
-
-  /** Sink over a byte-level transport, records serialized through the
-    * ToRecord typeclass (reference ToPutRecordsRequest.scala). */
-  def serialized[A: ToRecord](
-      putBytes: Seq[(String, Array[Byte])] => Seq[PutResult],
       config: Config = Config(),
       sleeper: Long => Unit = Thread.sleep): BatchingSink[A] = {
     val enc = ToRecord[A]
     new BatchingSink[A](
-      batch => putBytes(batch.map(a => (enc.partitionKey(a), enc.payload(a)))),
+      batch => writer.putRecords(batch.map(a => (enc.partitionKey(a), enc.payload(a)))),
       config, sleeper)
   }
 }

@@ -283,7 +283,7 @@ final class KinesisShardReader(
         }
       Transport.ShardInfo(d.shardId,
         (d.parentShardId.toSeq ++ d.adjacentParentShardId).distinct,
-        maxSeq = Some(frontier))
+        maxSeq = frontier)
     }
   }
 

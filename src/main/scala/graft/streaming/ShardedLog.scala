@@ -318,13 +318,10 @@ class ShardedLogMicroBatchStream(options: CaseInsensitiveStringMap)
 
   /** One describeShards pass → (per-shard frontier, per-shard parents);
     * the maxes half is the admission frontier, the parents half feeds
-    * reshard gating. A reader that carries the frontier inline
-    * (ShardInfo.maxSeq) costs exactly one client call per trigger;
-    * per-shard maxSequence is only the fallback. */
+    * reshard gating: one client call per trigger. */
   private def currentState(): (Map[String, Long], Map[String, Seq[String]]) = {
     val infos = reader.describeShards()
-    (infos.map(si =>
-        si.shardId -> si.maxSeq.getOrElse(reader.maxSequence(si.shardId))).toMap,
+    (infos.map(si => si.shardId -> si.maxSeq).toMap,
       infos.map(si => si.shardId -> si.parents).toMap)
   }
 

@@ -1,39 +1,52 @@
 package graft.streaming
 
 import java.nio.file.{Path, Paths}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import scala.collection.mutable.ArrayBuffer
 
-/** Write side of the sharded log: a `foreachBatch` writer that routes a
-  * micro-batch's (shard, value) rows into per-shard record files — the
-  * durable counterpart of [[BatchingSink]] (which models the transport
-  * semantics; this models the storage layout the source reads).
+/** Write side of the sharded log: lays rows out as the per-shard record
+  * files the source reads, the durable counterpart of [[BatchingSink]]
+  * (which models the transport semantics). Files are published whole
+  * (ShardedLog.append is write-temp + atomic move) and REPLACE what is at
+  * their sequence, so rewriting a layout — a replayed epoch, when
+  * checkpoint recovery re-runs foreachBatch — is idempotent.
   *
-  * Each epoch appends at most one file per shard, named by the epoch
-  * sequence, so (a) per-shard sequence numbers are monotonic across
-  * batches, (b) a replayed epoch (checkpoint recovery re-running
-  * foreachBatch) overwrites the same file idempotently instead of
-  * duplicating records, and (c) readers tailing the log see whole files
-  * atomically (ShardedLog.append is write-temp + atomic move).
-  *
-  * Scale: rows are repartitioned by shard, so each task writes its
-  * shards locally — no driver collection, no cross-task file contention.
+  * Scale: rows are repartitioned by shard and sorted within each
+  * partition, so each task writes its shards locally, in order, holding
+  * one file's records at a time: no driver collection, no cross-task
+  * file contention.
   */
 object ShardedLogWriter {
 
-  /** Writer for `writeStream.foreachBatch(...)`; expects columns
-    * `shard: string, value: string`. */
-  def foreachBatchWriter(root: Path): (DataFrame, Long) => Unit = {
+  /** Lays out `rows`, columns `(shard, order…, payload)`, as per-shard
+    * files of `chunk` records in `order…` order, numbered from
+    * `firstSeq`. */
+  def write(root: Path, rows: DataFrame, chunk: Int, firstSeq: Long = 1L): Unit = {
+    val keyed = rows.toDF(rows.columns.indices.map("c" + _): _*)
     val rootStr = root.toString
-    (batch: DataFrame, epochId: Long) => {
-      batch.select(col("shard").cast("string"), col("value").cast("string"))
-        .repartition(col("shard"))
-        .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-          rows.toSeq.groupBy(_.getString(0)).foreach { case (shard, rs) =>
-            ShardedLog.append(Paths.get(rootStr), shard, epochId + 1L,
-              rs.map(_.getString(1)))
-          }
+    keyed.repartition(col("c0")).sortWithinPartitions(keyed.columns.init.map(col).toSeq: _*)
+      .select(col("c0").cast("string"), col(keyed.columns.last).cast("string"))
+      .foreachPartition { (it: Iterator[Row]) =>
+        val buf = ArrayBuffer.empty[String]
+        var (shard, seq) = (null: String, firstSeq)
+        def flush(): Unit = if (buf.nonEmpty) {
+          ShardedLog.append(Paths.get(rootStr), shard, seq, buf.toSeq)
+          seq += 1; buf.clear()
         }
-    }
+        it.foreach { r =>
+          if (r.getString(0) != shard) { flush(); shard = r.getString(0); seq = firstSeq }
+          buf += r.getString(1)
+          if (buf.size == chunk) flush()
+        }
+        flush()
+      }
   }
+
+  /** Writer for `writeStream.foreachBatch(...)` over columns
+    * `shard: string, value: string`: epoch `e` writes one file per shard
+    * at sequence `e + 1`, so per-shard sequences grow across batches. */
+  def foreachBatchWriter(root: Path): (DataFrame, Long) => Unit =
+    (batch, epochId) =>
+      write(root, batch.select(col("shard"), col("value")), Int.MaxValue, epochId + 1L)
 }

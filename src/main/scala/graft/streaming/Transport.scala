@@ -76,17 +76,14 @@ object Transport {
   /** Shard identity with reshard parentage — the reference's
     * parentShardId + adjacentParentShardId pair
     * (KinesisSource.scala:135-141): one parent = split child, two
-    * parents = merge child, none = original shard.
-    *
-    * `maxSeq`, when present, is the shard's current frontier as of this
-    * describeShards call, letting the driver admit a micro-batch from
-    * ONE client call per trigger instead of one maxSequence call per
-    * shard (the N+1 that multiplies API traffic for a remote client at
-    * high shard counts — the reference gets shard metadata in a single
-    * describeStream). Readers that can't compute it cheaply leave None
-    * and the source falls back to per-shard maxSequence. */
-  final case class ShardInfo(
-      shardId: String, parents: Seq[String], maxSeq: Option[Long] = None)
+    * parents = merge child, none = original shard — and `maxSeq`, the
+    * shard's frontier (highest sequence present, 0 when empty) as of
+    * this describeShards call. Every reader fills it, so the driver
+    * admits a micro-batch from ONE client call per trigger, as the
+    * reference gets shard metadata from a single describeStream, never
+    * one maxSequence call per shard (the N+1 that multiplies API
+    * traffic for a remote client at high shard counts). */
+  final case class ShardInfo(shardId: String, parents: Seq[String], maxSeq: Long)
 }
 
 /** Source-side client surface (see [[Transport]]). All methods are
@@ -104,8 +101,9 @@ trait ShardReader extends Serializable {
     * then once per batch until the snapshot is drained. */
   def describeShards(): Seq[Transport.ShardInfo]
 
-  /** Highest sequence currently present in `shard` (0 when empty) — the
-    * admission frontier. */
+  /** Highest sequence currently present in `shard` (0 when empty): one
+    * shard's frontier on its own. The source takes every frontier from
+    * [[describeShards]] (`ShardInfo.maxSeq`) instead. */
   def maxSequence(shard: String): Long
 
   /** Highest sequence whose record arrived strictly before `tsUs`
@@ -161,7 +159,7 @@ final class FileShardReader(rootStr: String) extends ShardReader {
     ShardedLog.listShards(root).map { d =>
       val name = d.getFileName.toString
       Transport.ShardInfo(name, ShardedLog.parentsOf(root, name),
-        maxSeq = Some(ShardedLog.maxSeq(d)))
+        maxSeq = ShardedLog.maxSeq(d))
     }
 
   override def maxSequence(shard: String): Long = ShardedLog.maxSeq(root.resolve(shard))
@@ -307,7 +305,7 @@ final class InMemoryTransport(
     log.synchronized {
       log.shards.keys.toSeq.sorted.map(s =>
         Transport.ShardInfo(s, log.parents.getOrElse(s, Vector.empty),
-          maxSeq = Some(log.shards(s).length.toLong)))
+          maxSeq = log.shards(s).length.toLong))
     }
   }
 

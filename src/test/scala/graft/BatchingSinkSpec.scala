@@ -140,11 +140,11 @@ class BatchingSinkSpec extends AnyFunSuite {
   test("ToRecord typeclass serializes records for a byte-level transport") {
     import graft.streaming.ToRecord
     val seen = mutable.Buffer.empty[(String, String)]
-    val results = BatchingSink.serialized[(String, String)](
-      { batch =>
+    val results = BatchingSink.over[(String, String)](
+      { (batch: Seq[(String, Array[Byte])]) =>
         batch.foreach { case (k, b) => seen += ((k, new String(b, "UTF-8"))) }
         batch.map(_ => PutResult(None))
-      }, sleeper = _ => ())(ToRecord.keyedRecord[String])
+      }: graft.streaming.RecordWriter, sleeper = _ => ())(ToRecord.keyedRecord[String])
       .run(Iterator(("k1", "v1"), ("k2", "v2"))).toSeq
     assert(results.forall(_.isRight))
     assert(seen.toSeq === Seq(("k1", "v1"), ("k2", "v2")))

@@ -1,7 +1,9 @@
 package graft
 
 import java.util.concurrent.ConcurrentHashMap
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerStageSubmitted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerStageCompleted,
+  SparkListenerStageSubmitted}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import scala.jdk.CollectionConverters._
 
 /** A fed s-entry's micro-batches are its drain's feeds: a chunked entry
@@ -11,7 +13,8 @@ import scala.jdk.CollectionConverters._
   * redelivery shares the first batch or not), so the batches are counted
   * from the drain's jobs: each stage a streaming query submits carries
   * the query id and batch id, and the stage that reads the source
-  * records how many rows it read. */
+  * records how many rows it read. Every feed is read through the
+  * sharded-log source, which the drains' physical plans name. */
 class FeedBatchSpec extends SparkSpec {
 
   /** Rows read by each non-empty batch, in batch order, per drain the
@@ -56,5 +59,36 @@ class FeedBatchSpec extends SparkSpec {
   test("s4's redelivery arrives in its own batch") {
     val events = Tables.events(spark, Sf0001).count()
     assert(batchInputs("s4_watermark_dedup") === Seq(Seq(events, events)))
+  }
+
+  /** The description of every streaming scan in the physical plans the
+    * entry's executions report, one per scan node per micro-batch. */
+  private def streamingScans(entry: String): Seq[String] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      SparkEntry.queries(entry)(spark, Sf0001).collect()
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    } finally sc.removeSparkListener(listener)
+    // formatted mode: "(n) MicroBatchScan", its Output line, then the scan
+    val scan = """\(\d+\) MicroBatchScan\n[^\n]*\n([^\n]*)""".r
+    plans.asScala.toSeq.flatMap(p => scan.findAllMatchIn(p).map(_.group(1)))
+  }
+
+  test("every feed reads the sharded log: s4, s7 and s8 scan ShardedLogTable, not MemoryStream") {
+    for (entry <- Seq("s4_watermark_dedup", "s7_stream_stream_join", "s8_stream_quality_gate")) {
+      val scans = streamingScans(entry)
+      assert(scans.nonEmpty, s"$entry: no streaming scan in its plans")
+      assert(scans.forall(_.startsWith("class graft.streaming.ShardedLogTable")),
+        s"$entry scans ${scans.distinct}")
+    }
   }
 }

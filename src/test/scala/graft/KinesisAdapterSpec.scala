@@ -309,7 +309,7 @@ class KinesisAdapterSpec extends AnyFunSuite {
         pollParallelism = shardCount)
       val infos = r.describeShards()
       assert(infos.size === shardCount)
-      assert(infos.flatMap(_.maxSeq).sum === shardCount.toLong,
+      assert(infos.map(_.maxSeq).sum === shardCount.toLong,
         "every shard's frontier was polled to its one record")
     } finally FakeKinesis.drop(id)
   }

@@ -240,6 +240,47 @@ class ShardedLogSpec extends SparkSpec {
     assert(aRows.last.getString(2) === "a3")
   }
 
+  test("the one writer: per-shard files of chunk rows in order from firstSeq, replaced on rewrite") {
+    import graft.streaming.ShardedLogWriter
+    import scala.jdk.CollectionConverters._
+    val root = tmpRoot()
+    // (shard, order, payload), scattered over partitions out of order
+    val rows = Seq(("a", 5L, "a5"), ("b", 2L, "b2"), ("a", 1L, "a1"), ("a", 4L, "a4"),
+      ("b", 1L, "b1"), ("a", 3L, "a3"), ("a", 2L, "a2")).toDF("shard", "k", "payload")
+      .repartition(3)
+    def layout(): Map[String, Seq[(String, Seq[String])]] =
+      Seq("a", "b").map { shard =>
+        val files = Files.list(root.resolve(shard)).iterator().asScala.toSeq
+          .map(_.getFileName.toString).sorted
+        shard -> files.map(f => f -> ShardedLog.readRecPayloads(root.resolve(shard).resolve(f))
+          .map(new String(_, "UTF-8")))
+      }.toMap
+    val expected = Map(
+      "a" -> Seq("00000003.recb" -> Seq("a1", "a2"), "00000004.recb" -> Seq("a3", "a4"),
+        "00000005.recb" -> Seq("a5")),
+      "b" -> Seq("00000003.recb" -> Seq("b1", "b2")))
+    ShardedLogWriter.write(root, rows, chunk = 2, firstSeq = 3L)
+    assert(layout() === expected)
+    // a second write at the same sequences replaces its files, no duplicates
+    ShardedLogWriter.write(root, rows, chunk = 2, firstSeq = 3L)
+    assert(layout() === expected)
+    assert(readAll(root).count() === 7)
+
+    // one file per trigger: each micro-batch reads one file, in order
+    val one = tmpRoot()
+    ShardedLogWriter.write(one, rows.filter($"shard" === "a"), chunk = 2)
+    val name = "sl_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val q = spark.readStream.format(ShardedLog.Format)
+      .option("path", one.toString).option("maxFilesPerTrigger", "1")
+      .load().writeStream.format("memory").queryName(name)
+      .option("checkpointLocation", Files.createTempDirectory("ckpt").toString)
+      .start()
+    q.processAllAvailable(); q.stop()
+    assert(q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq === Seq(2L, 2L, 1L))
+    assert(spark.table(name).select($"value").as[String].collect().toSeq ===
+      Seq("a1", "a2", "a3", "a4", "a5"))
+  }
+
   test("latestOffset preserves committed positions for shards absent from a listing") {
     import graft.streaming.{InMemoryTransport, ShardedLogMicroBatchStream,
       ShardedLogOffset, Transport, TransportRegistry, ShardReader}

@@ -10,8 +10,10 @@
 #   4. tools/check.py — the driver-faithful dtype-strict DuckDB compare;
 #      any FAIL or EMPTY entry, or an unparsed test count, fails the gate;
 #      prints the ten slowest DuckDB oracles
-#   5. prints the SWEEP line with Verify's wall seconds (appends to
-#      SWEEP.md with ROUND_CLOSE_APPEND=1)
+#   5. prints the SWEEP line with Verify's wall seconds and the first 12
+#      hex digits of oracle_sql.json's sha256, so a line shows whether the
+#      oracle SQL is byte-identical to another's (appends to SWEEP.md
+#      with ROUND_CLOSE_APPEND=1)
 #   6. on PASS, deletes the parquet dumps and keeps oracle_sql.json,
 #      verify.log and check.log
 #
@@ -70,7 +72,8 @@ sed -nE 's/^(PASS|FAIL) +([^:]+):.*\(oracle ([0-9.]+)s\)$/\3 \2/p' "$OUT/check.l
 SHA=$(git rev-parse --short HEAD 2>/dev/null || echo unknown)
 DIRTY=""
 git diff --quiet 2>/dev/null || DIRTY="+wip"
-LINE="- $ROUND $(date -u +%F) $SHA$DIRTY — $pass hash-PASS / $failn FAIL / $rows rows-only (of $total) — ${NOTE:-scripted round-close gate}; Verify ${VERIFY_S} s; $TESTS."
+ORACLE=$(sha256sum "$OUT/oracle_sql.json" | cut -c1-12)
+LINE="- $ROUND $(date -u +%F) $SHA$DIRTY — $pass hash-PASS / $failn FAIL / $rows rows-only (of $total) — ${NOTE:-scripted round-close gate}; Verify ${VERIFY_S} s; oracle_sql.json sha256 $ORACLE; $TESTS."
 echo "$LINE"
 if [ "${ROUND_CLOSE_APPEND:-0}" = "1" ]; then
   echo "$LINE" >> SWEEP.md
