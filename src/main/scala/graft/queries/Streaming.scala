@@ -1,8 +1,8 @@
 package graft.queries
 
 import graft.Tables
-import graft.streaming.{BatchingSink, FileRecordWriter, ShardedLog, ShardedLogWriter, StreamOps,
-  ToRecord}
+import graft.streaming.{BatchingSink, FileRecordWriter, RowBytes, ShardedLog, ShardedLogWriter,
+  StreamOps, ToRecord}
 import java.nio.file.{Path, Paths}
 import java.util.UUID
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
@@ -103,7 +103,8 @@ object Streaming {
     * input runs a single batch) or, with `redeliver`, as the whole input
     * at sequences 1 and 2. The drain admits one file per trigger: each
     * batch is one input partition whose rows arrive in file order
-    * (FeedBatchSpec counts them), decoded back to `input`'s schema. An
+    * (FeedBatchSpec counts them), decoded back to `input`'s schema from
+    * their `RowBytes` images. An
     * entry whose fold depends on arrival order names its total order in
     * `orderBy`, which the writer's one task sorts by (a Spark `orderBy`
     * adds a range-sampling job: +11-29% on those entries, BENCH_NOTES
@@ -111,41 +112,36 @@ object Streaming {
   private def drainFed(input: DataFrame, outputMode: String, orderBy: Seq[String] = Nil,
                        redeliver: Boolean = false)(
       pipeline: DataFrame => DataFrame): DataFrame = {
+    val s = input.sparkSession
     val rows = input.select(lit("feed") +: orderBy.map(input.col) :+
-      encode(input.columns.map(input.col).toSeq: _*): _*)
-    drainLog(input.sparkSession, outputMode) { root =>
-      if (redeliver) Seq(1L, 2L).foreach(ShardedLogWriter.write(root, rows, Int.MaxValue, _))
+      RowBytes.encode(input.columns.map(input.col).toSeq: _*): _*)
+    drainLog(s, outputMode) { root =>
+      if (redeliver) ShardedLogWriter.write(root, rows, Int.MaxValue, firstSeqs = Seq(1L, 2L))
       else ShardedLogWriter.write(root, rows,
         chunk = math.max(1L, (input.count() + DrainChunks - 1) / DrainChunks).toInt)
-    } { log =>
-      pipeline(decode(log.option("maxFilesPerTrigger", "1").load(), input.schema))
+      pipeline(decode(readLog(s, root).option("maxFilesPerTrigger", "1").load(), input.schema))
     }
   }
 
-  /** Runs `pipeline` as a bounded drain over a sharded log that `write`
-    * lays out in a fresh tmpfs dir, read through the DSv2 source from the
-    * trim horizon. Once the drain returns the memory sink holds the
-    * result, so the log is deleted then, not at JVM exit. */
-  private def drainLog(s: SparkSession, outputMode: String)(write: Path => Unit)(
-      pipeline: DataStreamReader => DataFrame): DataFrame = {
+  /** Runs the stream `run` builds over the fixture logs it lays out in a
+    * fresh tmpfs dir as a bounded drain. Once the drain returns the
+    * memory sink holds the result, so the dir is deleted then, not at
+    * JVM exit. */
+  private def drainLog(s: SparkSession, outputMode: String)(run: Path => DataFrame): DataFrame = {
     val root = Paths.get(graft.util.TempDirs.freshUnder("/dev/shm", "graft-log"))
-    try {
-      write(root)
-      drain(s, pipeline(s.readStream.format(ShardedLog.Format)
-        .option("path", root.toString)
-        .option("startingPosition", "trim_horizon")), outputMode)
-    } finally graft.util.TempDirs.delete(root.toString)
+    try drain(s, run(root), outputMode)
+    finally graft.util.TempDirs.delete(root.toString)
   }
 
-  /** One row as one record: its columns as JSON with microsecond
-    * timestamps (Spark's default keeps milliseconds; nearly every
-    * `events.ts` has microseconds). A payload that does not parse fails
-    * the drain instead of becoming a null row. */
-  private val JsonOptions = Map(
-    "timestampFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX", "mode" -> "FAILFAST")
-  private def encode(cols: Column*): Column = to_json(struct(cols: _*), JsonOptions)
+  /** The log at `root`, read through the DSv2 source from the trim horizon. */
+  private def readLog(s: SparkSession, root: Path): DataStreamReader =
+    s.readStream.format(ShardedLog.Format)
+      .option("path", root.toString)
+      .option("startingPosition", "trim_horizon")
+
+  /** A log's `RowBytes` records as rows of `schema`. */
   private def decode(log: DataFrame, schema: StructType): DataFrame =
-    log.select(from_json(col("value"), schema, JsonOptions).as("r")).select("r.*")
+    log.select(RowBytes.decode(col("value_bin"), schema).as("r")).select("r.*")
 
   /** events as log rows: shard s<user_id mod 4>, in event_id order. */
   private def eventLog(s: SparkSession, dir: String,
@@ -183,8 +179,9 @@ object Streaming {
          |  MIN(event_id) AS min_id, MAX(event_id) AS max_id
          |FROM ev GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
       import s.implicits._
-      drainLog(s, "complete")(ShardedLogWriter.write(_, eventLog(s, dir), chunk = 2000)) {
-        _.load()
+      drainLog(s, "complete") { root =>
+        ShardedLogWriter.write(root, eventLog(s, dir), chunk = 2000)
+        readLog(s, root).load()
           .select($"shard", $"value".cast("long").as("event_id"))
           .groupBy($"shard")
           .agg(count(lit(1)).as("n"),
@@ -210,8 +207,9 @@ object Streaming {
       // time, not operator work)
       val total = Tables.events(s, dir).count()
       val chunk = math.max(500L, total / 4 / DrainBatches + 1).toInt
-      drainLog(s, "complete")(ShardedLogWriter.write(_, eventLog(s, dir), chunk)) {
-        _.option("maxFilesPerTrigger", "1").load()
+      drainLog(s, "complete") { root =>
+        ShardedLogWriter.write(root, eventLog(s, dir), chunk)
+        readLog(s, root).option("maxFilesPerTrigger", "1").load()
           .select($"shard", $"value".cast("long").as("event_id"))
           .groupBy($"shard")
           .agg(count(lit(1)).as("n"), sum($"event_id").as("id_sum"))
@@ -606,10 +604,9 @@ object Streaming {
         .select($"doc_id", $"lang", $"text")
       val t0 = new java.sql.Timestamp(86400000L)
       drainLog(s, "append") { root =>
-        ShardedLogWriter.write(root, docLog, chunk = 2000)
-        ShardedLogWriter.write(root, docLog, chunk = 2000, firstSeq = 1000L) // redelivery
-      } { log =>
-        val enriched = log.load()
+        // the whole layout again from sequence 1000: the redelivery
+        ShardedLogWriter.write(root, docLog, chunk = 2000, firstSeqs = Seq(1L, 1000L))
+        val enriched = readLog(s, root).load()
           .select($"value".cast("long").as("doc_id"))
           .join(broadcast(catalog), "doc_id")
           .select($"lang", Text.fingerprint($"text").as("f"),
@@ -849,15 +846,17 @@ object Streaming {
          |  AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR
          |GROUP BY c.user_id ORDER BY c.user_id""".stripMargin) { (s, dir) =>
       import s.implicits._
-      // one fixture log, a shard per side in event_id (≡ time) order;
+      // a fixture log per side, one shard in event_id (≡ time) order;
       // unthrottled, the first trigger admits all of it as one batch
-      val ev = Tables.events(s, dir).filter($"event_type".isin("click", "purchase"))
+      val ev = Tables.events(s, dir)
       val side = ev.select($"user_id", $"ts").schema
-      drainLog(s, "append")(ShardedLogWriter.write(_,
-          ev.select($"event_type", $"event_id", encode($"user_id", $"ts")), chunk = 2000)) { log =>
-        def stream(shard: String, user: String, ts: String) =
-          decode(log.load().filter($"shard" === shard), side).toDF(user, ts)
-            .withWatermark(ts, "2 hours")
+      drainLog(s, "append") { root =>
+        def stream(eventType: String, user: String, ts: String) = {
+          val log = root.resolve(eventType)
+          ShardedLogWriter.write(log, ev.filter($"event_type" === eventType)
+            .select(lit("s"), $"event_id", RowBytes.encode($"user_id", $"ts")), chunk = 2000)
+          decode(readLog(s, log).load(), side).toDF(user, ts).withWatermark(ts, "2 hours")
+        }
         stream("click", "c_user", "c_ts").join(stream("purchase", "p_user", "p_ts"),
           $"c_user" === $"p_user" &&
             $"p_ts" >= $"c_ts" && $"p_ts" <= $"c_ts" + expr("INTERVAL 1 HOUR"))
@@ -990,8 +989,7 @@ object Streaming {
                 throw new IllegalStateException(s"binary put failed: $r")
             }
           }
-      } {
-        _.load()
+        readLog(s, root).load()
           .select(base64($"value_bin").as("b64"))
           .groupBy($"b64").agg(count(lit(1)).as("n"))
       }.orderBy($"b64")
@@ -1025,8 +1023,9 @@ object Streaming {
       // payload: per-shard files in (event_id ≡ time) order
       val log = eventLog(s, dir, format_string("%d|%d", $"event_id", unix_micros($"ts")))
       val wDay = org.apache.spark.sql.expressions.Window.partitionBy($"wday")
-      drainLog(s, "complete")(ShardedLogWriter.write(_, log, chunk = 2000)) {
-        _.load()
+      drainLog(s, "complete") { root =>
+        ShardedLogWriter.write(root, log, chunk = 2000)
+        readLog(s, root).load()
           .select($"shard",
             timestamp_micros(split($"value", "\\|")(1).cast("long")).as("ts"))
           .withWatermark("ts", "1 hour")

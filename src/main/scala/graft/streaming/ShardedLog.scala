@@ -77,13 +77,23 @@ object ShardedLog {
     * publishes through [[link]] instead, which never replaces. Returns
     * the file's path. */
   def append(root: Path, shard: String, seq: Long, lines: Seq[String]): Path =
-    staged(root, shard, writeFrames(lines.map(_.getBytes(StandardCharsets.UTF_8))))(
-      replace(_, _, seq))
+    publish(root, shard, Seq(seq), lines.iterator.map(_.getBytes(StandardCharsets.UTF_8)))
 
-  private[streaming] def writeFrames(payloads: Seq[Array[Byte]])(tmp: Path): Unit = {
+  /** [[append]] of byte payloads, streamed into the temp file as they
+    * come, and the same file published at every sequence of `seqs` (a
+    * redelivery is the file again, later). Returns the last path. */
+  private[streaming] def publish(root: Path, shard: String, seqs: Seq[Long],
+                                 payloads: Iterator[Array[Byte]]): Path =
+    staged(root, shard, writeFrames(payloads)) { (dir, tmp) =>
+      seqs.init.foreach(seq => staged(root, shard,
+        Files.copy(tmp, _, StandardCopyOption.REPLACE_EXISTING))(replace(_, _, seq)))
+      replace(dir, tmp, seqs.last)
+    }
+
+  private[streaming] def writeFrames(payloads: IterableOnce[Array[Byte]])(tmp: Path): Unit = {
     val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
       Files.newOutputStream(tmp)))
-    try payloads.foreach { p => out.writeInt(p.length); out.write(p) }
+    try payloads.iterator.foreach { p => out.writeInt(p.length); out.write(p) }
     finally out.close()
   }
 

@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.scheduler.SparkListenerInterface
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -13,6 +14,10 @@ object GraftSqlBridge {
     * standard library technique (`Dataset.ofRows` is sql-private). */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** A Column over a Catalyst expression, and back. */
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+  def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
   /** A clone of `spark` over the same SparkContext, with its own SQLConf,
     * temp views and StreamingQueryManager: the session Spark's

@@ -17,12 +17,25 @@ import scala.jdk.CollectionConverters._
   * sharded-log source, which the drains' physical plans name. */
 class FeedBatchSpec extends SparkSpec {
 
+  /** Runs `entry` with `listener` on the context's bus, until the bus
+    * has delivered every event the run posted. */
+  private def observe(entry: String)(listener: SparkListener): Unit = {
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      SparkEntry.queries(entry)(spark, Sf0001).collect()
+      // events arrive asynchronously; `listenerBus` is Spark-private
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** Rows read by each non-empty batch, in batch order, per drain the
     * entry runs. */
   private def batchInputs(entry: String): Seq[Seq[Long]] = {
     val batchOf = new ConcurrentHashMap[Int, (String, Long)]()
     val read = new ConcurrentHashMap[(String, Long), java.lang.Long]()
-    val listener = new SparkListener {
+    observe(entry)(new SparkListener {
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
         Option(e.properties).foreach { p =>
           val query = p.getProperty("sql.streaming.queryId")
@@ -35,15 +48,7 @@ class FeedBatchSpec extends SparkSpec {
           key <- Option(batchOf.get(e.stageInfo.stageId))
           metrics <- Option(e.stageInfo.taskMetrics)
         } read.merge(key, metrics.inputMetrics.recordsRead, (a, b) => a + b)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      SparkEntry.queries(entry)(spark, Sf0001).collect()
-      // stage events arrive asynchronously; `listenerBus` is Spark-private
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    } finally sc.removeSparkListener(listener)
+    })
     read.asScala.toSeq.filter(_._2 > 0)
       .groupBy { case ((query, _), _) => query }.values
       .map(_.sortBy { case ((_, batch), _) => batch }.map(_._2.longValue)).toSeq
@@ -65,19 +70,12 @@ class FeedBatchSpec extends SparkSpec {
     * entry's executions report, one per scan node per micro-batch. */
   private def streamingScans(entry: String): Seq[String] = {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
+    observe(entry)(new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
         case _ =>
       }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      SparkEntry.queries(entry)(spark, Sf0001).collect()
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    } finally sc.removeSparkListener(listener)
+    })
     // formatted mode: "(n) MicroBatchScan", its Output line, then the scan
     val scan = """\(\d+\) MicroBatchScan\n[^\n]*\n([^\n]*)""".r
     plans.asScala.toSeq.flatMap(p => scan.findAllMatchIn(p).map(_.group(1)))

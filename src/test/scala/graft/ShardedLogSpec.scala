@@ -240,7 +240,7 @@ class ShardedLogSpec extends SparkSpec {
     assert(aRows.last.getString(2) === "a3")
   }
 
-  test("the one writer: per-shard files of chunk rows in order from firstSeq, replaced on rewrite") {
+  test("the one writer: per-shard files of chunk rows in order from each firstSeq, replaced on rewrite") {
     import graft.streaming.ShardedLogWriter
     import scala.jdk.CollectionConverters._
     val root = tmpRoot()
@@ -248,7 +248,7 @@ class ShardedLogSpec extends SparkSpec {
     val rows = Seq(("a", 5L, "a5"), ("b", 2L, "b2"), ("a", 1L, "a1"), ("a", 4L, "a4"),
       ("b", 1L, "b1"), ("a", 3L, "a3"), ("a", 2L, "a2")).toDF("shard", "k", "payload")
       .repartition(3)
-    def layout(): Map[String, Seq[(String, Seq[String])]] =
+    def layout(root: java.nio.file.Path = root): Map[String, Seq[(String, Seq[String])]] =
       Seq("a", "b").map { shard =>
         val files = Files.list(root.resolve(shard)).iterator().asScala.toSeq
           .map(_.getFileName.toString).sorted
@@ -259,12 +259,19 @@ class ShardedLogSpec extends SparkSpec {
       "a" -> Seq("00000003.recb" -> Seq("a1", "a2"), "00000004.recb" -> Seq("a3", "a4"),
         "00000005.recb" -> Seq("a5")),
       "b" -> Seq("00000003.recb" -> Seq("b1", "b2")))
-    ShardedLogWriter.write(root, rows, chunk = 2, firstSeq = 3L)
+    ShardedLogWriter.write(root, rows, chunk = 2, firstSeqs = Seq(3L))
     assert(layout() === expected)
     // a second write at the same sequences replaces its files, no duplicates
-    ShardedLogWriter.write(root, rows, chunk = 2, firstSeq = 3L)
+    ShardedLogWriter.write(root, rows, chunk = 2, firstSeqs = Seq(3L))
     assert(layout() === expected)
     assert(readAll(root).count() === 7)
+    // a second firstSeq publishes the whole layout again from there
+    val twice = tmpRoot()
+    ShardedLogWriter.write(twice, rows, chunk = 2, firstSeqs = Seq(3L, 10L))
+    assert(layout(twice) === expected.map { case (shard, files) =>
+      shard -> (files ++ files.map { case (f, recs) =>
+        f"${f.take(8).toLong + 7}%08d.recb" -> recs })
+    })
 
     // one file per trigger: each micro-batch reads one file, in order
     val one = tmpRoot()
@@ -279,6 +286,18 @@ class ShardedLogSpec extends SparkSpec {
     assert(q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq === Seq(2L, 2L, 1L))
     assert(spark.table(name).select($"value").as[String].collect().toSeq ===
       Seq("a1", "a2", "a3", "a4", "a5"))
+  }
+
+  test("RowBytes carries every value of a row bit for bit") {
+    import graft.streaming.RowBytes
+    val in = spark.sql("""SELECT * FROM VALUES
+      (1L, TIMESTAMP'2024-01-02 03:04:05.123456', array(1.5f, -0.0f, float('NaN')),
+        'ünï', CAST(12.34 AS DECIMAL(18, 2)), NULL),
+      (2L, NULL, array(), '', NULL, 'x') AS t(id, ts, v, s, d, n)""")
+    val back = in.select(RowBytes.encode(in.columns.map(in.col).toSeq: _*).as("b"))
+      .select(RowBytes.decode($"b", in.schema).as("r")).select("r.*")
+    assert(back.schema === in.schema)
+    assert(back.collect().map(_.toString).toSeq === in.collect().map(_.toString).toSeq)
   }
 
   test("latestOffset preserves committed positions for shards absent from a listing") {
